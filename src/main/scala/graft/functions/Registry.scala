@@ -1,62 +1,56 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.{functions => F}
 
 /** Registers the engine's custom SQL functions on a session (idempotent). */
 object Registry {
+  /** Adds each function the session lacks and leaves the rest alone, so a
+    * repeat call costs a lookup per name and logs no "replaced a previously
+    * registered function" warning ([[graft.EtlSession]] sessions already
+    * carry the [[graft.GraftExtensions]] functions). */
   def registerAll(spark: SparkSession): Unit = {
     val fr = spark.sessionState.functionRegistry
-    fr.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "shingles", exprs => Shingles(exprs(0), exprs(1)), "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "winnow", exprs => Winnow(exprs(0), exprs(1), exprs(2)), "scala_udf")
+    def absent(name: String) = !fr.functionExists(FunctionIdentifier(name))
+    def add(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (absent(name)) fr.createOrReplaceTempFunction(name, builder, "scala_udf")
+    add("cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)))
+    add("jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)))
+    add("shingles", exprs => Shingles(exprs(0), exprs(1)))
+    add("winnow", exprs => Winnow(exprs(0), exprs(1), exprs(2)))
     // Spark's runtime-filter bloom expressions, surfaced as SQL functions
     // (they are not in the public registry, but they ARE the engine-native
     // bloom implementation — codegen'd probe, sketch-library build).
-    fr.createOrReplaceTempFunction(
-      "bloom_agg", {
-        case Seq(c)       => new org.apache.spark.sql.catalyst.expressions
-          .aggregate.BloomFilterAggregate(c)
-        case Seq(c, n)    => new org.apache.spark.sql.catalyst.expressions
-          .aggregate.BloomFilterAggregate(c, n)
-        case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions
-          .aggregate.BloomFilterAggregate(c, n, b)
-        case other => throw new IllegalArgumentException(
-          s"bloom_agg takes 1-3 args, got ${other.size}")
-      }, "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs => new org.apache.spark.sql.catalyst
-        .expressions.BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "normalize_ts", exprs => NormalizeTs(exprs(0)), "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "pq_adc", exprs => PqAdc(exprs(0), exprs(1)), "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode.fromLiteral(exprs(0), exprs(1)),
-      "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "bpe_segment", exprs => BpeSegment.fromLiteral(exprs(0), exprs(1)),
-      "scala_udf")
+    add("bloom_agg", {
+      case Seq(c)       => new org.apache.spark.sql.catalyst.expressions
+        .aggregate.BloomFilterAggregate(c)
+      case Seq(c, n)    => new org.apache.spark.sql.catalyst.expressions
+        .aggregate.BloomFilterAggregate(c, n)
+      case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions
+        .aggregate.BloomFilterAggregate(c, n, b)
+      case other => throw new IllegalArgumentException(
+        s"bloom_agg takes 1-3 args, got ${other.size}")
+    })
+    add("bloom_might_contain", exprs => new org.apache.spark.sql.catalyst
+      .expressions.BloomFilterMightContain(exprs(0), exprs(1)))
+    add("normalize_ts", exprs => NormalizeTs(exprs(0)))
+    add("pq_adc", exprs => PqAdc(exprs(0), exprs(1)))
+    add("pq_encode", exprs => PqEncode.fromLiteral(exprs(0), exprs(1)))
+    add("bpe_segment", exprs => BpeSegment.fromLiteral(exprs(0), exprs(1)))
     // SRP join-rewrite kernels, surfaced for SQL use too:
     // srp_bands(vec, nBits, bandBits, seed) / first_equal_band(a, b)
-    fr.createOrReplaceTempFunction(
-      "srp_bands", {
-        case Seq(v, n, b, s) => SrpBands(v,
-          n.eval().asInstanceOf[Number].intValue,
-          b.eval().asInstanceOf[Number].intValue,
-          s.eval().asInstanceOf[Number].longValue)
-        case other => throw new IllegalArgumentException(
-          s"srp_bands takes (vec, nBits, bandBits, seed), got ${other.size} args")
-      }, "scala_udf")
-    fr.createOrReplaceTempFunction(
-      "first_equal_band", exprs => FirstEqualBand(exprs(0), exprs(1)),
-      "scala_udf")
-    spark.udf.register("geomean", F.udaf(GeoMean))
+    add("srp_bands", {
+      case Seq(v, n, b, s) => SrpBands(v,
+        n.eval().asInstanceOf[Number].intValue,
+        b.eval().asInstanceOf[Number].intValue,
+        s.eval().asInstanceOf[Number].longValue)
+      case other => throw new IllegalArgumentException(
+        s"srp_bands takes (vec, nBits, bandBits, seed), got ${other.size} args")
+    })
+    add("first_equal_band", exprs => FirstEqualBand(exprs(0), exprs(1)))
+    if (absent("geomean")) spark.udf.register("geomean", F.udaf(GeoMean))
   }
 
   /** [[CosineSimilarity]] as a typed Column — for Scala call sites that

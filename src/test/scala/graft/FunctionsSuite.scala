@@ -144,6 +144,31 @@ class FunctionsSuite extends SparkTestBase {
     }
   }
 
+  test("Registry.registerAll twice: second call replaces nothing, all resolve") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fr = spark.sessionState.functionRegistry
+    functions.Registry.registerAll(spark)
+    val names = fr.listFunction()
+    // a re-registration would build a fresh ExpressionInfo for the name
+    val infos = names.map(n => n -> fr.lookupFunction(n).get).toMap
+    functions.Registry.registerAll(spark)
+    assert(fr.listFunction() == names)
+    infos.foreach { case (n, info) =>
+      assert(fr.lookupFunction(n).get eq info, s"$n was registered again")
+    }
+    Seq("cosine_similarity", "bloom_agg", "geomean").foreach(n =>
+      assert(fr.functionExists(FunctionIdentifier(n)), n))
+    val Row(cos: Double, hit: Boolean, miss: Boolean, gm: Double) = spark.sql(
+      """WITH b AS (SELECT bloom_agg(xxhash64(id)) f FROM range(100))
+        |SELECT cosine_similarity(array(3.0D, 4.0D), array(6.0D, 8.0D)),
+        |       bloom_might_contain((SELECT f FROM b), xxhash64(7L)),
+        |       bloom_might_contain((SELECT f FROM b), xxhash64(-7L)),
+        |       (SELECT geomean(CAST(v AS DOUBLE))
+        |        FROM VALUES (2), (8) t(v))""".stripMargin).head()
+    assert(math.abs(cos - 1.0) < 1e-12 && hit && !miss)
+    assert(math.abs(gm - 4.0) < 1e-12)
+  }
+
   test("approx_count_distinct within 5% of exact") {
     Tables.register(spark, sf001)
     val Row(approx: Long, exact: Long) = spark.sql(

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Mirrors the driver's runtime configs: UTC session timezone, AQE on,
   * small shuffle partition count for test speed (scale designs are
-  * validated by plan shape + the sf0.1 bench, not by partition count here).
+  * validated by plan shape + the sf0.1 bench, not by partition count here),
+  * and [[EtlSession.SharedCodegenPin]], so suites load generated code the
+  * way the engine does.
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -28,6 +30,7 @@ object SparkTestBase {
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-warehouse-${System.getProperty("user.name")}")
       .config("spark.ui.enabled", "false")
+      .config(EtlSession.SharedCodegenPin)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -372,6 +372,37 @@ class StreamingSuite extends SparkTestBase {
     assert(out.count() > 0 && out.select("ws").distinct().count() >= batchWindows - 1)
   }
 
+  test("a repeat run of a streaming feed compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // each run starts its query on a fresh cloned session; the second run
+    // must still hit the codegen cache the first one filled
+    def run(): Set[String] = {
+      val sink = Files.createTempDirectory("graft-recompile").toString
+      graft.streaming.StreamingRunner.runJson(spark, s"""{
+        "name": "recompile-check",
+        "source": {
+          "view": "raw_stream", "format": "parquet",
+          "path": "$sf0001/events*.parquet",
+          "schemaFromParquet": "$sf0001/events.parquet"
+        },
+        "transforms": [
+          {"view": "norm", "sql": "SELECT event_id, normalize_ts(ts) AS ts, event_type, value FROM raw_stream"},
+          {"view": "hourly", "sql": "SELECT window(ts, '1 hour').start ws, event_type, COUNT(*) n, SUM(value) sum_value FROM norm GROUP BY window(ts, '1 hour'), event_type"}],
+        "watermarks": [{"view": "norm", "column": "ts", "delay": "10 minutes"}],
+        "sink": {"format": "parquet", "path": "$sink", "outputMode": "append"},
+        "trigger": "availableNow"
+      }""")
+      rowsOf(spark.read.parquet(s"$sink/data"))
+    }
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val first = run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(again == 0, s"the repeat run compiled $again classes")
+    assert(first.nonEmpty && second == first)
+  }
+
   test("checkpoint restart is idempotent: re-running an AvailableNow query adds nothing") {
     val out = Files.createTempDirectory("graft-ckpt").toString
     def run(): Unit = Streams.runToFiles(
