@@ -57,5 +57,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // spark.graft.srpJoinRewrite.enabled=true — the rule checks the
     // session conf per plan, so injection itself changes nothing)
     ext.injectOptimizerRule(_ => new graft.plans.SrpJoinRewrite)
+    // small global ORDER BY results sort on one partition: no range
+    // exchange, no sampling job (graft.plans.SmallSortOnePartition; an AQE
+    // runtime rule, so it only sees plans AQE re-optimizes)
+    ext.injectRuntimeOptimizerRule(_ => new graft.plans.SmallSortOnePartition)
   }
 }

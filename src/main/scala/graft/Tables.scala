@@ -50,8 +50,14 @@ object Tables {
     spark.table(name)
   }
 
-  /** events with ts normalized ns→µs (truncating, matching DuckDB). */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
+  /** events with ts normalized ns→µs (truncating, matching DuckDB): the
+    * registered `events` view, so a call lists no files and infers no
+    * schema once [[register]] has run. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    table(spark, sfDir, "events")
+
+  /** Read events.parquet and normalize ts; only [[register]] calls this. */
+  private def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.select(
@@ -72,7 +78,7 @@ object Tables {
     plain.foreach { n =>
       spark.read.parquet(s"$sfDir/$n.parquet").createOrReplaceTempView(n)
     }
-    events(spark, sfDir).createOrReplaceTempView("events")
+    readEvents(spark, sfDir).createOrReplaceTempView("events")
     registered.put(spark, sfDir)
   }
 }

@@ -51,6 +51,17 @@ object StreamingSpec {
     JsonMethods.parse(json).extract[StreamingSpec]
 }
 
+/** Runs a [[StreamingSpec]] on the caller's session, whose temp views the
+  * spec's source and transforms are registered as.
+  *
+  * On an `EtlSession` session (AQE on) every run logs two expected WARN
+  * lines: "spark.sql.adaptive.enabled is not supported in streaming
+  * DataFrames/Datasets and will be disabled" and, for a stateful query,
+  * "Disabling AQE since AQE is not supported in stateful workloads". Spark
+  * starts each stream on a cloned session and turns AQE off on that clone
+  * only, so the caller's batch queries keep it. A second session with AQE
+  * off would silence them but lose the caller's views (DESIGN.md "Config
+  * posture"). */
 object StreamingRunner {
 
   def runJson(spark: SparkSession, json: String): StreamingQuery =

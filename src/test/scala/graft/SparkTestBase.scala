@@ -18,6 +18,37 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  /** Spark jobs that `body` starts, counted by a `SparkListener`. Listener
+    * events arrive in order but asynchronously, so the count runs between
+    * two marker jobs and waits until the closing marker is seen. */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    def takeUntil(name: String): Int = Iterator
+      .continually(Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail(s"no listener event for marker job $name")))
+      .takeWhile(_ != name).size
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-before")
+      takeUntil("jobs-before")
+      body
+      marker("jobs-after")
+      takeUntil("jobs-after")
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {
