@@ -227,7 +227,7 @@ object Similarity {
     // 5× slower as a flat splittable sum + null-propagating length
     // guard (nBits·dim-node trees pay more in codegen than the lambda
     // interpreter costs on the signing pass: 0.59 s HOF vs 3.2 s
-    // unrolled, sf0.1 min-of-2 — tools/ProbeSrp records the A/B).
+    // unrolled, sf0.1 min-of-2 — OPTIMIZATION_r17.md §5 records the A/B).
     // The HOF stays; the per-row lambda cost is bounded by nBits·dim
     // multiply-adds and the signing pass is map-only at any scale.
     def dot(vec: Seq[Double]): Column =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 import graft.sources.{Sinks, Sources}
 
@@ -33,12 +33,15 @@ object PipelineRunner {
     * [[PipelineSpec.fromXml]], everything else as JSON. `params` bind
     * the spec's `${name}` placeholders (run date, environment roots). */
   def runFile(spark: SparkSession, path: String,
-              params: Map[String, String] = Map.empty): PipelineReport = {
+              params: Map[String, String] = Map.empty): PipelineReport =
+    run(spark, readSpec(path, params))
+
+  private def readSpec(path: String, params: Map[String, String]): PipelineSpec = {
     val text = PipelineSpec.substitute(new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       java.nio.charset.StandardCharsets.UTF_8), params)
-    if (path.endsWith(".xml")) run(spark, PipelineSpec.fromXml(text))
-    else runJson(spark, text)
+    if (path.endsWith(".xml")) PipelineSpec.fromXml(text)
+    else PipelineSpec.fromJson(text)
   }
 
   /** Validate a spec against the real catalog without executing any
@@ -46,36 +49,9 @@ object PipelineRunner {
     * errors, missing columns, and bad SQL all surface), and each load's
     * would-be physical plan is returned as text. The dry run triggers
     * zero jobs — analysis and planning are driver-side only. */
-  def dryRun(spark: SparkSession, spec: PipelineSpec): Seq[(String, String)] = {
-    graft.functions.Registry.registerAll(spark)
-    spec.extracts.foreach { e =>
-      Sources.read(spark, e.format, e.path, e.schema, e.options)
-        .createOrReplaceTempView(e.view)
-    }
-    spec.transforms.foreach { tr =>
-      val df: DataFrame = (tr.sql, tr.className) match {
-        case (Some(sql), _) => spark.sql(sql)
-        case (_, Some(cls)) =>
-          val stage = Class.forName(cls).getDeclaredConstructor()
-            .newInstance().asInstanceOf[TransformStage]
-            .withOptions(tr.options)
-          stage(spark, tr.inputs.map(v => v -> spark.table(v)).toMap)
-        case _ => throw new IllegalStateException(s"transform ${tr.view}")
-      }
-      df.queryExecution.assertAnalyzed()
-      df.createOrReplaceTempView(tr.view)
-    }
-    val defaultSource = spec.transforms.lastOption.map(_.view)
-      .orElse(spec.extracts.headOption.map(_.view))
-    spec.loads.map { l =>
-      val src = l.source.orElse(defaultSource).getOrElse(
-        throw new IllegalArgumentException("load: no source view"))
-      val target = l.table.getOrElse(l.path)
-      s"$src -> ${l.format}:$target" ->
-        spark.table(src).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    }
-  }
+  def dryRun(spark: SparkSession, spec: PipelineSpec): Seq[(String, String)] =
+    perLoad(spark, spec)(_.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
 
   /** Column-level lineage per load (see [[Lineage]]): resolve the feed
     * like [[dryRun]] — zero jobs — and return, for every load, the
@@ -83,7 +59,24 @@ object PipelineRunner {
     * it. The impact-analysis entry point a feed repository runs in CI
     * next to the dry run. */
   def lineage(spark: SparkSession,
-              spec: PipelineSpec): Seq[(String, Map[String, Set[String]])] = {
+              spec: PipelineSpec): Seq[(String, Map[String, Set[String]])] =
+    perLoad(spark, spec)(Lineage.columnLineage)
+
+  private def perLoad[T](spark: SparkSession, spec: PipelineSpec)(
+      f: DataFrame => T): Seq[(String, T)] = {
+    val defaultSource = prepare(spark, spec)
+    spec.loads.map { l =>
+      val src = sourceOf(l, defaultSource)
+      s"$src -> ${l.format}:${l.table.getOrElse(l.path)}" -> f(spark.table(src))
+    }
+  }
+
+  /** The extract → transform prelude every entry point shares: registers
+    * the engine's functions, a temp view per extract and per transform
+    * (each transform analyzed as it registers, so a bad one fails here),
+    * and returns the default load source — the last transform's view,
+    * else the first extract's. */
+  private def prepare(spark: SparkSession, spec: PipelineSpec): Option[String] = {
     graft.functions.Registry.registerAll(spark)
     spec.extracts.foreach { e =>
       Sources.read(spark, e.format, e.path, e.schema, e.options)
@@ -102,42 +95,16 @@ object PipelineRunner {
       df.queryExecution.assertAnalyzed()
       df.createOrReplaceTempView(tr.view)
     }
-    val defaultSource = spec.transforms.lastOption.map(_.view)
+    spec.transforms.lastOption.map(_.view)
       .orElse(spec.extracts.headOption.map(_.view))
-    spec.loads.map { l =>
-      val src = l.source.orElse(defaultSource).getOrElse(
-        throw new IllegalArgumentException("load: no source view"))
-      val target = l.table.getOrElse(l.path)
-      s"$src -> ${l.format}:$target" ->
-        Lineage.columnLineage(spark.table(src))
-    }
   }
 
+  private def sourceOf(l: LoadSpec, defaultSource: Option[String]): String =
+    l.source.orElse(defaultSource).getOrElse(
+      throw new IllegalArgumentException("load: no source view"))
+
   def run(spark: SparkSession, spec: PipelineSpec): PipelineReport = {
-    graft.functions.Registry.registerAll(spark)
-
-    spec.extracts.foreach { e =>
-      Sources.read(spark, e.format, e.path, e.schema, e.options)
-        .createOrReplaceTempView(e.view)
-    }
-
-    spec.transforms.foreach { tr =>
-      val df: DataFrame = (tr.sql, tr.className) match {
-        case (Some(sql), _) => spark.sql(sql)
-        case (_, Some(cls)) =>
-          val stage = Class.forName(cls).getDeclaredConstructor()
-            .newInstance().asInstanceOf[TransformStage]
-            .withOptions(tr.options)
-          val inputs = tr.inputs.map(v => v -> spark.table(v)).toMap
-          stage(spark, inputs)
-        case _ => throw new IllegalStateException(s"transform ${tr.view}")
-      }
-      df.createOrReplaceTempView(tr.view)
-    }
-
-    val defaultSource =
-      spec.transforms.lastOption.map(_.view)
-        .orElse(spec.extracts.headOption.map(_.view))
+    val defaultSource = prepare(spark, spec)
 
     // Per-load retry with exponential backoff + failure isolation
     // (VERDICT r6 #6): each load gets 1 + retries attempts; a load that
@@ -149,8 +116,7 @@ object PipelineRunner {
     // replaced, not doubled.
     val loadReports = scala.collection.mutable.ArrayBuffer.empty[LoadReport]
     spec.loads.foreach { l =>
-      val src = l.source.orElse(defaultSource).getOrElse(
-        throw new IllegalArgumentException("load: no source view"))
+      val src = sourceOf(l, defaultSource)
       val target = l.table.getOrElse(l.path)
       val maxAttempts = 1 + l.retries.getOrElse(0)
       val backoff = l.retryBackoffMs.getOrElse(100L)
@@ -184,8 +150,6 @@ object PipelineRunner {
       loadReports.toSeq)
   }
 
-  /** One attempt of one load — the original single-shot body of
-    * [[run]]'s load loop. */
   /** Resolve the frozen centroid table for mode=knn/ivf: either the
     * static spec view (`centroids`) or — the lifecycle composition,
     * VERDICT r14 item 4 — the live COMMITTED version under an
@@ -216,106 +180,152 @@ object PipelineRunner {
   private def tableVersion(df: DataFrame): Option[Int] =
     if (!df.columns.contains("index_version")) None
     else {
-      val r = df.agg(org.apache.spark.sql.functions
-        .min("index_version")).collect()(0)
+      val r = df.agg(F.min("index_version")).collect()(0)
       if (r.isNullAt(0)) None else Some(r.getInt(0))
     }
 
+  /** Tags assignment rows with the committed quantizer version (a no-op
+    * on the static-centroids path). */
+  private def stamp(df: DataFrame, ver: Option[Int]): DataFrame =
+    ver.fold(df)(v => df.withColumn("index_version", F.lit(v)))
+
+  /** A standing knn/ivf assignment table brought to the committed
+    * version `ver`: as it stands on the static path or when already at
+    * `ver`; re-keyed from its stored `arr` by `assign` (map-only — the
+    * one corpus-scale pass a retrain already prices) when older;
+    * refused when NEWER, which means the lifecycle base was pruned or
+    * replaced and a silent downgrade would mix quantizers. */
+  private def atVersion(st: DataFrame, ver: Option[Int], l: LoadSpec,
+                        what: String)(
+      assign: (DataFrame, String, String) => DataFrame): DataFrame =
+    ver match {
+      case Some(v) =>
+        val sv = tableVersion(st)
+        if (sv.contains(v)) st
+        else if (sv.exists(_ > v)) throw new IllegalStateException(
+          s"$what at index_version ${sv.get} is NEWER than the committed " +
+            s"v$v under ${l.centroidsBase.get} — was the lifecycle base " +
+            "pruned or replaced? refusing to silently downgrade")
+        else assign(st.select("id", "arr"), "id", "arr")
+      case None => st
+    }
+
+  /** The batch rows whose `key` is not yet assigned in `standing`. */
+  private def unassigned(batch: DataFrame, standing: Option[DataFrame],
+                         key: String): DataFrame =
+    standing.fold(batch)(st =>
+      batch.join(st.select(F.col("id").as(key)), Seq(key), "left_anti"))
+
+  /** `standing` plus the rows of `add` whose `key` it does not hold yet,
+    * so replaying a batch lands nothing twice. */
+  private def appendNew(standing: Option[DataFrame], add: DataFrame,
+                        key: String): DataFrame =
+    standing.fold(add)(st => st.unionByName(
+      add.join(st.select(F.col(key)), Seq(key), "left_anti")))
+
+  /** `df` counting its rows as the write runs — observe() rides the write
+    * job, where a count() would re-execute the plan — and a reader of the
+    * count for after the write (-1 if it never ran). */
+  private def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val obs = new org.apache.spark.sql.Observation()
+    (df.observe(obs, F.count(F.lit(1)).as("rows")),
+      () => scala.util.Try(obs.get("rows").asInstanceOf[Long]).getOrElse(-1L))
+  }
+
+  private def exists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  private def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (exists(spark, dir)) Some(spark.read.parquet(dir)) else None
+
+  /** A swap-landing mode's merge result: the target's new contents, the
+    * sidecar's (for modes that keep one), and what to release once both
+    * are installed. */
+  private final case class Merged(target: DataFrame,
+                                  sidecar: Option[DataFrame] = None,
+                                  release: () => Unit = () => ())
+
+  /** One attempt of one load — the body of [[run]]'s retry loop.
+    *
+    * Every standing-target mode (upsert, cdc, rollup, dedup, knn, ivf,
+    * scd2, zorder) lands through one skeleton, so each is only its merge
+    * body: repair an interrupted swap of the target and its sidecar
+    * (`Sinks.recoverSwap`); hand the merge the standing target, read
+    * only if the mode touches it; observe the merged frame's row count
+    * on its own write; install it with the crash-safe directory swap
+    * (`Sinks.writeParquetSwapped` — the merged plan reads the directory
+    * it replaces, so a plain overwrite would truncate its own input);
+    * then swap the sidecar in. Target before sidecar: a crash between
+    * the two swaps replays against the unchanged sidecar and recomputes
+    * the same target, which the key anti-joins land only once. */
   private def executeLoad(spark: SparkSession, l: LoadSpec,
                           src: String): LoadReport = {
-      val df0 = spark.table(src)
-      // Output-file-count control: coalesce narrows without a shuffle;
-      // repartition forces an exchange for exact write parallelism.
-      val df1 = (l.repartition, l.coalesce) match {
-        case (Some(n), _) => df0.repartition(n)
-        case (_, Some(n)) => df0.coalesce(n)
-        case _            => df0
-      }
-      // written-row count rides the SAME job via observe() — the
-      // reference persisted per-load status rows; a count() would
-      // re-execute the whole plan
-      val obs = new org.apache.spark.sql.Observation()
-      val df = df1.observe(obs, org.apache.spark.sql.functions
-        .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-      def observedRows: Long =
-        scala.util.Try(obs.get("rows").asInstanceOf[Long]).getOrElse(-1L)
-      if (l.mode == "upsert") {
+    val df0 = spark.table(src)
+    // Output-file-count control: coalesce narrows without a shuffle;
+    // repartition forces an exchange for exact write parallelism.
+    val df1 = (l.repartition, l.coalesce) match {
+      case (Some(n), _) => df0.repartition(n)
+      case (_, Some(n)) => df0.coalesce(n)
+      case _            => df0
+    }
+    def required(opt: Option[String], what: String): String =
+      opt.getOrElse(throw new IllegalArgumentException(
+        s"${l.mode} load: '$what' required"))
+    def report(rows: Long) =
+      LoadReport(l.format, l.table.getOrElse(l.path), src, rows)
+    def swapLanded(sidecar: Option[String] = None)(
+        merge: (=> Option[DataFrame]) => Merged): LoadReport = {
+      Sinks.recoverSwap(df1, l.path)
+      sidecar.foreach(Sinks.recoverSwap(df1, _))
+      lazy val standing = readIfExists(spark, l.path)
+      val m = merge(standing)
+      // the figure is the row count of the frame written — the standing
+      // count after the merge, however the mode consumes the batch
+      val (target, rows) = counted(m.target)
+      Sinks.writeParquetSwapped(target, l.path)
+      for (dir <- sidecar; df <- m.sidecar) Sinks.writeParquetSwapped(df, dir)
+      m.release()
+      report(rows())
+    }
+
+    l.mode match {
+      case "upsert" =>
         // declarative MERGE-INTO landing: latest-wins per key against
-        // the standing parquet target, installed with the crash-safe
-        // directory swap (the merged plan READS the target dir, so a
-        // plain overwrite would truncate its own input)
-        val key = l.key.getOrElse(
-          throw new IllegalArgumentException("upsert load: 'key' required"))
-        val ver = l.versionCol.getOrElse(
-          throw new IllegalArgumentException("upsert load: 'versionCol' required"))
-        // observe the MERGED plan (not df1): the reported figure is the
-        // standing row count after the merge, and it stays correct no
-        // matter how Merge.upsert internally consumes the updates frame
-        Sinks.recoverSwap(df1, l.path)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged0 =
-          if (fs.exists(new org.apache.hadoop.fs.Path(l.path)))
-            graft.ops.Merge.upsert(spark.read.parquet(l.path), df1, key, ver)
-          else df1
-        val merged = merged0.observe(mergedObs, org.apache.spark.sql
-          .functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "cdc") {
+        // the standing parquet target
+        val key = required(l.key, "key")
+        val ver = required(l.versionCol, "versionCol")
+        swapLanded() { standing =>
+          Merged(standing.fold(df1)(graft.ops.Merge.upsert(_, df1, key, ver)))
+        }
+      case "cdc" =>
         // declarative CDC landing: the feed carries inserts/updates/
         // deletes ordered by seqCols; the standing table is kept in
         // TOMBSTONE form (winning deletes retained, op column intact)
         // so a later run's lower-sequence stragglers cannot resurrect
         // deleted keys — batch-by-batch landing equals the one-shot
         // apply (graft.ops.Merge.applyChangesWithTombstones). Readers
-        // serve `op != 'D'`. Same crash-safe swap as upsert.
-        val key = l.key.getOrElse(
-          throw new IllegalArgumentException("cdc load: 'key' required"))
-        Sinks.recoverSwap(df1, l.path)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val merged0 =
-          if (fs.exists(new org.apache.hadoop.fs.Path(l.path)))
-            graft.ops.Merge.applyChangesWithTombstones(
-              spark.read.parquet(l.path).unionByName(df1), key, l.seqCols)
-          else graft.ops.Merge.applyChangesWithTombstones(df1, key, l.seqCols)
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged = merged0.observe(mergedObs, org.apache.spark.sql
-          .functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "rollup") {
+        // serve `op != 'D'`.
+        val key = required(l.key, "key")
+        swapLanded() { standing =>
+          Merged(graft.ops.Merge.applyChangesWithTombstones(
+            standing.fold(df1)(_.unionByName(df1)), key, l.seqCols))
+        }
+      case "rollup" =>
         // declarative incremental-rollup landing: the delta batch is
         // aggregated once and folded into the standing per-key state
         // table by the measures' monoid (graft.ops.Rollup) — history is
-        // never rescanned. Same crash-safe swap as upsert (the merged
-        // plan reads the target it replaces). NOTE: additive semantics —
-        // each run must be a NEW delta (exactly-once feed); replaying a
-        // batch is the streaming runner's job (Streams.runRollup).
+        // never rescanned. NOTE: additive semantics — each run must be a
+        // NEW delta (exactly-once feed); replaying a batch is the
+        // streaming runner's job (Streams.runRollup).
         val keys = l.rollupKeys
         val ms = l.measures.map(graft.ops.Rollup.parseMeasure)
-        Sinks.recoverSwap(df1, l.path)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val delta = graft.ops.Rollup.aggregate(df1, keys, ms)
-        val merged0 =
-          if (fs.exists(new org.apache.hadoop.fs.Path(l.path)))
-            graft.ops.Rollup.merge(spark.read.parquet(l.path), delta, keys, ms)
-          else delta
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged = merged0.observe(mergedObs, org.apache.spark.sql
-          .functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "dedup") {
+        swapLanded() { standing =>
+          val delta = graft.ops.Rollup.aggregate(df1, keys, ms)
+          Merged(standing.fold(delta)(graft.ops.Rollup.merge(_, delta, keys, ms)))
+        }
+      case "dedup" =>
         // declarative incremental NEAR-DEDUP landing (the L2+ MinHash
         // tier as a feed surface — VERDICT r11 item 7): the batch is
         // shingled and signed ONCE, dropped against the standing
@@ -324,242 +334,105 @@ object PipelineRunner {
         // survivors append to the standing corpus; their signatures
         // append to the sidecar so the NEXT feed run sees them.
         // Standing-corpus-dominates makes re-applying the same feed a
-        // no-op, and the target union is key-anti-joined so a crash
-        // between the two swaps replays to the same state. Standing
-        // corpus TEXT is never re-read — only its signature table.
-        val key = l.key.getOrElse(
-          throw new IllegalArgumentException("dedup load: 'key' required"))
-        val text = l.textCol.getOrElse(
-          throw new IllegalArgumentException("dedup load: 'textCol' required"))
-        val sigsPath = s"${l.path}_sigs"
-        Sinks.recoverSwap(df1, l.path)
-        Sinks.recoverSwap(df1, sigsPath)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
+        // no-op. Standing corpus TEXT is never re-read — only its
+        // signature table.
+        val key = required(l.key, "key")
+        val text = required(l.textCol, "textCol")
         val shingleN = l.dedupShingleN.getOrElse(3)
         val thr = l.dedupThreshold.getOrElse(0.8)
-        // sidecar backfill (r12 ADVICE): a pre-existing target WITHOUT
-        // a `_sigs` sidecar means the standing corpus was landed before
-        // the feed switched to mode=dedup — its text was never signed,
-        // so treating it as an empty signature table would silently
-        // drop near-dup protection against every original standing doc
-        // (only the exact-key anti-join would remain). Sign the
-        // standing text ONCE (it is available at l.path), install the
-        // sidecar with the same crash-safe swap, and proceed as a
-        // normal increment. One-time migration cost: one signature
-        // pass over the standing corpus.
-        if (!fs.exists(new org.apache.hadoop.fs.Path(sigsPath)) &&
-            fs.exists(new org.apache.hadoop.fs.Path(l.path)))
-          Sinks.writeParquetSwapped(
-            graft.ops.Dedup.minHashSignatures(
-              spark.read.parquet(l.path), key, text, shingleN),
-            sigsPath)
-        val haveSigs = fs.exists(new org.apache.hadoop.fs.Path(sigsPath))
-        val corpusSigs =
-          if (haveSigs) spark.read.parquet(sigsPath)
-          else graft.ops.Dedup.minHashSignatures(
-            df1.limit(0), key, text, shingleN)
-        val (kept, keptSigs) = graft.ops.Dedup.incrementalMinHashNearDup(
-          df1, key, text, corpusSigs, shingleN, thr)
-        val merged0 =
-          if (fs.exists(new org.apache.hadoop.fs.Path(l.path))) {
-            val standing = spark.read.parquet(l.path)
-            standing.unionByName(kept.join(
-              standing.select(org.apache.spark.sql.functions.col(key)),
-              Seq(key), "left_anti"))
-          } else kept
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged = merged0.observe(mergedObs, org.apache.spark.sql
-          .functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        val sigsMerged =
-          if (haveSigs)
-            corpusSigs.unionByName(keptSigs.join(
-              corpusSigs.select(org.apache.spark.sql.functions.col("id")),
-              Seq("id"), "left_anti"))
-          else keptSigs
-        Sinks.writeParquetSwapped(sigsMerged, sigsPath)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "knn") {
+        val sigsPath = s"${l.path}_sigs"
+        swapLanded(Some(sigsPath)) { standing =>
+          // sidecar backfill (r12 ADVICE): a target landed before the
+          // feed switched to mode=dedup has no `_sigs` — treating it as
+          // an empty signature table would drop near-dup protection
+          // against every standing doc. Sign the standing text ONCE and
+          // install the sidecar with the same swap: a one-time
+          // migration pass over the standing corpus.
+          if (!exists(spark, sigsPath) && standing.nonEmpty)
+            Sinks.writeParquetSwapped(graft.ops.Dedup.minHashSignatures(
+              standing.get, key, text, shingleN), sigsPath)
+          val sigs = readIfExists(spark, sigsPath)
+          val (kept, keptSigs) = graft.ops.Dedup.incrementalMinHashNearDup(
+            df1, key, text, sigs.getOrElse(graft.ops.Dedup.minHashSignatures(
+              df1.limit(0), key, text, shingleN)), shingleN, thr)
+          Merged(appendNew(standing, kept, key),
+            Some(appendNew(sigs, keptSigs, "id")))
+        }
+      case "knn" =>
         // declarative ANN-MAINTENANCE landing (VERDICT r12 item 5 —
-        // the batch form of Streams.runKnnGraphAppend, giving the
-        // similarity-index family the same feed surface as dedup/
-        // upsert/cdc/rollup/zorder): the target holds the standing
-        // kNN edge table; the `<path>_assign` sidecar holds the
-        // standing (id, cell, arr) assignments under the FROZEN
-        // centroid table named by `centroids` (a spec view — no
-        // refit, ever, so cell ids stay stable across years of
-        // feeds). Each run admits only ids NOT already assigned
-        // (re-applying a feed is a no-op), ANN-joins the fresh rows
-        // against standing ∪ fresh (intra-batch neighbors count,
-        // trivial self-edges excluded), appends the edges, and lands
-        // the fresh assignments for future runs. Crash-safe: edges
-        // swap first, assignments second — a crash between them
-        // replays against the UNCHANGED assignment set, recomputes
-        // identical edges, and the qid anti-join lands nothing twice.
-        val key = l.key.getOrElse(
-          throw new IllegalArgumentException("knn load: 'key' required"))
-        val vec = l.vecCol.getOrElse(
-          throw new IllegalArgumentException("knn load: 'vecCol' required"))
-        // lifecycle composition (VERDICT r14 item 4, the knn half): a
-        // committed retrain re-keys the standing ASSIGNMENT SIDECAR
-        // fully under the new version (map-only from the stored arr)
-        // so future candidate probes group under the new cells. The
-        // standing EDGE table is untouched by a bump: its neighbors
-        // are exact cosine results over the cells probed at their
-        // time and remain true near-neighbors — a quantizer version
-        // changes only future candidate RECALL, never the correctness
-        // of landed edges.
-        val (verOpt, cents) = resolveCentroids(spark, l, "knn")
+        // the batch form of Streams.runKnnGraphAppend): the target
+        // holds the standing kNN edge table; the `<path>_assign`
+        // sidecar holds the standing (id, cell, arr) assignments under
+        // the FROZEN centroid table (no refit, ever, so cell ids stay
+        // stable across feeds). Each run admits only ids NOT already
+        // assigned (re-applying a feed is a no-op), ANN-joins the fresh
+        // rows against standing ∪ fresh (intra-batch neighbors count,
+        // trivial self-edges excluded), appends the edges, and lands the
+        // fresh assignments for future runs.
+        //
+        // Lifecycle composition (VERDICT r14 item 4, the knn half): a
+        // committed retrain re-keys the assignment SIDECAR under the new
+        // version so future probes group under the new cells. The edge
+        // table is untouched by a bump: its neighbors are exact cosine
+        // results over the cells probed at their time — a quantizer
+        // version changes only future candidate RECALL.
+        val key = required(l.key, "key")
+        val vec = required(l.vecCol, "vecCol")
         val assignPath = s"${l.path}_assign"
-        Sinks.recoverSwap(df1, l.path)
-        Sinks.recoverSwap(df1, assignPath)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val haveAssign =
-          fs.exists(new org.apache.hadoop.fs.Path(assignPath))
-        def stampK(df: DataFrame): DataFrame = verOpt match {
-          case Some(v) => df.withColumn("index_version",
-            org.apache.spark.sql.functions.lit(v))
-          case None => df
+        swapLanded(Some(assignPath)) { standing =>
+          val (ver, cents) = resolveCentroids(spark, l, "knn")
+          def assign(df: DataFrame, k: String, v: String) =
+            stamp(graft.ops.Similarity.ivfAssign(df, k, v, cents), ver)
+          val standingAssign = readIfExists(spark, assignPath).map(
+            atVersion(_, ver, l, "knn load: assignment sidecar")(assign))
+          // cache: feeds the union corpus, the edge queries, and the
+          // assignment landing — released after both swaps
+          val freshAssigned =
+            assign(unassigned(df1, standingAssign, key), key, vec).cache()
+          val freshArr = freshAssigned.select("id", "arr")
+          val edges = graft.ops.Similarity.annJoin(freshArr,
+            standingAssign.fold(freshArr)(
+              _.select("id", "arr").unionByName(freshArr)),
+            "id", "arr", cents, l.knnK.getOrElse(10), l.knnProbe.getOrElse(2),
+            excludeSelf = Some(true))
+          Merged(appendNew(standing, edges, "qid"),
+            Some(standingAssign.fold(freshAssigned)(_.unionByName(freshAssigned))),
+            () => freshAssigned.unpersist())
         }
-        val standingAssign0 =
-          if (haveAssign) Some(spark.read.parquet(assignPath)) else None
-        val standingAssign = (standingAssign0, verOpt) match {
-          case (Some(st), Some(v)) =>
-            val sv = tableVersion(st)
-            if (sv.contains(v)) Some(st)
-            else if (sv.exists(_ > v)) throw new IllegalStateException(
-              s"knn load: assignment sidecar at index_version ${sv.get} " +
-                s"is NEWER than the committed v$v under " +
-                s"${l.centroidsBase.get} — was the lifecycle base pruned " +
-                "or replaced? refusing to silently downgrade")
-            else Some(stampK(graft.ops.Similarity.ivfAssign(
-              st.select("id", "arr"), "id", "arr", cents)))
-          case _ => standingAssign0
-        }
-        val fresh = standingAssign match {
-          case Some(st) => df1.join(
-            st.select(org.apache.spark.sql.functions.col("id").as(key)),
-            Seq(key), "left_anti")
-          case None => df1
-        }
-        // cache: feeds the union corpus, the edge queries, and the
-        // assignment landing — eager-unpersist after both swaps
-        val freshAssigned = stampK(graft.ops.Similarity.ivfAssign(
-          fresh, key, vec, cents)).cache()
-        val standingArr = standingAssign match {
-          case Some(st) => st.select("id", "arr")
-            .unionByName(freshAssigned.select("id", "arr"))
-          case None => freshAssigned.select("id", "arr")
-        }
-        val edges = graft.ops.Similarity.annJoin(
-          freshAssigned.select("id", "arr"), standingArr, "id", "arr",
-          cents, l.knnK.getOrElse(10), l.knnProbe.getOrElse(2),
-          excludeSelf = Some(true))
-        val merged0 =
-          if (fs.exists(new org.apache.hadoop.fs.Path(l.path))) {
-            val standing = spark.read.parquet(l.path)
-            standing.unionByName(edges.join(
-              standing.select(org.apache.spark.sql.functions.col("qid")),
-              Seq("qid"), "left_anti"))
-          } else edges
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged = merged0.observe(mergedObs, org.apache.spark.sql
-          .functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        val assignMerged = standingAssign match {
-          case Some(st) => st.unionByName(freshAssigned)
-          case None => freshAssigned
-        }
-        Sinks.writeParquetSwapped(assignMerged, assignPath)
-        freshAssigned.unpersist()
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "ivf") {
+      case "ivf" =>
         // declarative ASSIGNMENT-TABLE landing (VERDICT r13 item 4 —
         // the retrieval-structure twin of mode=knn): the target holds
         // the standing (id, cell, arr[, code]) assignment table under
-        // the FROZEN centroid view named by `centroids`; an optional
-        // `codebooks` view (subspace, centroid_id, centroid — the
-        // pqCodebooks layout) adds the PQ code column, i.e. the fused
-        // IVF+PQ retrieval layout, encoded with frozen codebooks. Each
-        // run admits only ids NOT already assigned (re-applying a feed
-        // is a no-op — the ivfAssign append discipline: cell ids are
-        // stable forever because the quantizer never refits here;
-        // re-training is a separate, versioned lifecycle —
-        // ops.IndexLifecycle). ONE swapped write; recoverSwap repairs
-        // a crash mid-swap.
+        // the FROZEN centroid view; an optional `codebooks` view
+        // (subspace, centroid_id, centroid — the pqCodebooks layout)
+        // adds the PQ code column, i.e. the fused IVF+PQ layout,
+        // encoded with frozen codebooks. Each run admits only ids NOT
+        // already assigned (re-applying a feed is a no-op; re-training
+        // is a separate, versioned lifecycle — ops.IndexLifecycle).
         //
         // Lifecycle composition (VERDICT r14 item 4): with
-        // `centroidsBase` instead of a static view, the committed
-        // version resolves at run start and the standing table carries
-        // an `index_version` column. A committed RETRAIN bumps the
-        // resolved version, and the next feed run re-keys the ENTIRE
-        // standing table under v+1 (map-only from the stored `arr` —
-        // the one corpus-scale pass a retrain already prices) in the
-        // SAME swapped write as the batch admit: a crash anywhere
-        // before the swap leaves the old version's table readable; a
-        // re-run recomputes the identical bump; re-applying a feed
-        // after a completed bump is a no-op.
-        val key = l.key.getOrElse(
-          throw new IllegalArgumentException("ivf load: 'key' required"))
-        val vec = l.vecCol.getOrElse(
-          throw new IllegalArgumentException("ivf load: 'vecCol' required"))
-        val (verOpt, cents) = resolveCentroids(spark, l, "ivf")
-        Sinks.recoverSwap(df1, l.path)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val have = fs.exists(new org.apache.hadoop.fs.Path(l.path))
-        def encode(df: DataFrame): DataFrame = l.codebooks match {
-          case Some(cbView) => graft.ops.Similarity.withPqCode(
-            df, "arr",
-            graft.ops.Similarity.pqCodebooksFromTable(spark.table(cbView)))
-          case None => df
+        // `centroidsBase`, a committed RETRAIN re-keys the ENTIRE
+        // standing table under v+1 in the SAME swapped write as the
+        // batch admit: a crash before the swap leaves the old version's
+        // table readable; a re-run recomputes the identical bump.
+        val key = required(l.key, "key")
+        val vec = required(l.vecCol, "vecCol")
+        swapLanded() { standing =>
+          val (ver, cents) = resolveCentroids(spark, l, "ivf")
+          def encode(df: DataFrame): DataFrame = l.codebooks match {
+            case Some(cbView) => graft.ops.Similarity.withPqCode(
+              df, "arr",
+              graft.ops.Similarity.pqCodebooksFromTable(spark.table(cbView)))
+            case None => df
+          }
+          def assign(df: DataFrame, k: String, v: String) =
+            stamp(encode(graft.ops.Similarity.ivfAssign(df, k, v, cents)), ver)
+          val st = standing.map(
+            atVersion(_, ver, l, "ivf load: standing table")(assign))
+          val assigned = assign(unassigned(df1, st, key), key, vec)
+          Merged(st.fold(assigned)(_.unionByName(assigned)))
         }
-        def stamp(df: DataFrame): DataFrame = verOpt match {
-          case Some(v) => df.withColumn("index_version",
-            org.apache.spark.sql.functions.lit(v))
-          case None => df
-        }
-        val standing0 =
-          if (have) Some(spark.read.parquet(l.path)) else None
-        val standing = (standing0, verOpt) match {
-          case (Some(st), Some(v)) =>
-            val sv = tableVersion(st)
-            if (sv.contains(v)) Some(st)
-            else if (sv.exists(_ > v)) throw new IllegalStateException(
-              s"ivf load: standing table at index_version ${sv.get} is " +
-                s"NEWER than the committed v$v under " +
-                s"${l.centroidsBase.get} — was the lifecycle base pruned " +
-                "or replaced? refusing to silently downgrade")
-            else Some(stamp(encode(graft.ops.Similarity.ivfAssign(
-              st.select("id", "arr"), "id", "arr", cents))))
-          case _ => standing0
-        }
-        val fresh = standing match {
-          case Some(st) => df1.join(
-            st.select(org.apache.spark.sql.functions.col("id").as(key)),
-            Seq(key), "left_anti")
-          case None => df1
-        }
-        val assigned = stamp(encode(graft.ops.Similarity.ivfAssign(
-          fresh, key, vec, cents)))
-        val merged0 = standing match {
-          case Some(st) => st.unionByName(assigned)
-          case None => assigned
-        }
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged = merged0.observe(mergedObs, org.apache.spark.sql
-          .functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "scd2") {
+      case "scd2" =>
         // declarative SCD Type-2 landing: the feed batch's latest
         // change per key (by `versionCol`) closes a differing open row
         // at that timestamp and opens a new one
@@ -567,34 +440,39 @@ object PipelineRunner {
         // no-op, so re-applying a batch is idempotent. First run
         // bootstraps from an EMPTY current with the dimension schema
         // derived from the batch — every batch key then inserts as an
-        // open row through the same code path. Same crash-safe swap
-        // as upsert (the merged plan reads the target it replaces).
+        // open row through the same code path.
         import org.apache.spark.sql.functions.{col, lit}
-        val key = l.key.getOrElse(
-          throw new IllegalArgumentException("scd2 load: 'key' required"))
-        val ts = l.versionCol.getOrElse(
-          throw new IllegalArgumentException(
-            "scd2 load: 'versionCol' (change-ts column) required"))
+        val key = required(l.key, "key")
+        val ts = l.versionCol.getOrElse(throw new IllegalArgumentException(
+          "scd2 load: 'versionCol' (change-ts column) required"))
         val attrs = l.scdAttrs
-        Sinks.recoverSwap(df1, l.path)
-        val fs = new org.apache.hadoop.fs.Path(l.path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val cur0 =
-          if (fs.exists(new org.apache.hadoop.fs.Path(l.path)))
-            spark.read.parquet(l.path)
-          else df1.select(col(key) +: attrs.map(col) :+
-              col(ts).as("valid_from") :+
-              lit(null).cast(df1.schema(ts).dataType).as("valid_to"): _*)
-            .limit(0)
-        val mergedObs = new org.apache.spark.sql.Observation()
-        val merged = graft.ops.Merge.scd2Apply(cur0, df1, key, ts, attrs)
-          .observe(mergedObs, org.apache.spark.sql.functions
-            .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(merged, l.path)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(mergedObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else if (l.mode == "compact") {
+        swapLanded() { standing =>
+          val cur = standing.getOrElse(
+            df1.select(col(key) +: attrs.map(col) :+
+                col(ts).as("valid_from") :+
+                lit(null).cast(df1.schema(ts).dataType).as("valid_to"): _*)
+              .limit(0))
+          Merged(graft.ops.Merge.scd2Apply(cur, df1, key, ts, attrs))
+        }
+      case "zorder" =>
+        // declarative re-layout maintenance load (the Compact family's
+        // clustering twin): rewrite the target z-order-clustered on
+        // `zorderBy` into `zorderFiles` range-partitioned files, so
+        // every file holds a small hyper-rectangle in the clustered
+        // columns and zone maps prune multi-column predicates
+        // (graft.ops.Layout.zorderByN — exact integer interleave over
+        // equi-depth ranks). The usual spec's extract view IS the
+        // target path, so the standing table arrives as the batch and
+        // the skeleton's read is never taken.
+        val nFiles = l.zorderFiles.getOrElse(8)
+        swapLanded() { _ =>
+          Merged(
+            if (l.zorderCurve.contains("hilbert"))
+              graft.ops.Layout.hilbertOrderBy(df1,
+                l.zorderBy.head, l.zorderBy(1), nFiles = nFiles)
+            else graft.ops.Layout.zorderByN(df1, l.zorderBy, nFiles = nFiles))
+        }
+      case "compact" =>
         // declarative small-file compaction (the maintenance twin of
         // mode=zorder without re-clustering): rewrite the target
         // directory into measured-bytes-sized files, optionally
@@ -604,40 +482,15 @@ object PipelineRunner {
         // target read back (the zorder convention) and is not
         // consumed: compaction is in-place maintenance, not a write
         // of new data.
-        val report = graft.ops.Compact.compactDir(spark, l.path,
+        report(graft.ops.Compact.compactDir(spark, l.path,
           targetBytes = l.compactTargetBytes.getOrElse(128L << 20),
-          sortCol = l.compactSortCol)
-        LoadReport(l.format, l.table.getOrElse(l.path), src, report.rows)
-      } else if (l.mode == "zorder") {
-        // declarative re-layout maintenance load (the Compact family's
-        // clustering twin): rewrite the target z-order-clustered on
-        // `zorderBy` into `zorderFiles` range-partitioned files, so
-        // every file holds a small hyper-rectangle in the clustered
-        // columns and zone maps prune multi-column predicates
-        // (graft.ops.Layout.zorderByN — exact integer interleave over
-        // equi-depth ranks). Crash-safe swap: the usual spec reads the
-        // standing table it replaces (extract view = target path), and
-        // a plain overwrite would truncate its own input.
-        Sinks.recoverSwap(df1, l.path)
-        val zObs = new org.apache.spark.sql.Observation()
-        val nFiles = l.zorderFiles.getOrElse(8)
-        val clustered =
-          if (l.zorderCurve.contains("hilbert"))
-            graft.ops.Layout.hilbertOrderBy(df1,
-              l.zorderBy.head, l.zorderBy(1), nFiles = nFiles)
-          else graft.ops.Layout.zorderByN(df1, l.zorderBy, nFiles = nFiles)
-        val zo = clustered
-          .observe(zObs, org.apache.spark.sql.functions
-            .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        Sinks.writeParquetSwapped(zo, l.path)
-        LoadReport(l.format, l.table.getOrElse(l.path), src,
-          scala.util.Try(zObs.get("rows").asInstanceOf[Long])
-            .getOrElse(-1L))
-      } else {
+          sortCol = l.compactSortCol).rows)
+      case _ =>
+        val (df, rows) = counted(df1)
         Sinks.write(df, l.format, l.path, l.mode,
           l.partitionBy, l.options, l.table)
-        LoadReport(l.format, l.table.getOrElse(l.path), src, observedRows)
-      }
+        report(rows())
+    }
   }
 
   /** Persist one status row per load attempt outcome to the RDBMS named
@@ -704,12 +557,7 @@ object PipelineRunner {
       appName = "graft-pipeline")
     try {
       if (args.contains("--dry-run") || args.contains("--lineage")) {
-        val text = PipelineSpec.substitute(
-          new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(specPath)),
-            java.nio.charset.StandardCharsets.UTF_8), params)
-        val spec = if (specPath.endsWith(".xml")) PipelineSpec.fromXml(text)
-                   else PipelineSpec.fromJson(text)
+        val spec = readSpec(specPath, params)
         if (args.contains("--lineage")) {
           lineage(spark, spec).foreach { case (target, cols) =>
             println(s"== $target ==")

@@ -177,6 +177,10 @@ object PipelineSpec {
     spec
   }
 
+  /** Load modes that land into a standing parquet directory. */
+  private val ParquetOnlyModes = Set("upsert", "cdc", "rollup", "dedup", "knn",
+    "ivf", "scd2", "compact", "zorder")
+
   def validate(spec: PipelineSpec): Unit = {
     require(spec.name.nonEmpty, "pipeline: name is required")
     require(spec.extracts.nonEmpty, "pipeline: at least one extract")
@@ -195,29 +199,24 @@ object PipelineSpec {
       l.retries.foreach(r => require(r >= 0, "load: retries must be >= 0"))
       l.source.foreach(s => require(known.contains(s),
         s"load: unknown source view '$s' (known: ${known.mkString(", ")})"))
-      if (l.mode == "upsert") {
+      if (ParquetOnlyModes(l.mode))
         require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=upsert supports parquet targets only")
+          s"load: mode=${l.mode} supports parquet targets only")
+      if (l.mode == "upsert") {
         require(l.key.isDefined && l.versionCol.isDefined,
           "load: mode=upsert requires 'key' and 'versionCol'")
       }
       if (l.mode == "cdc") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=cdc supports parquet targets only")
         require(l.key.isDefined && l.seqCols.nonEmpty,
           "load: mode=cdc requires 'key' and 'seqCols'")
       }
       if (l.mode == "rollup") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=rollup supports parquet targets only")
         require(l.rollupKeys.nonEmpty && l.measures.nonEmpty,
           "load: mode=rollup requires 'rollupKeys' and 'measures'")
         // fail at parse time, not mid-run
         l.measures.foreach(graft.ops.Rollup.parseMeasure)
       }
       if (l.mode == "dedup") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=dedup supports parquet targets only")
         require(l.key.isDefined && l.textCol.isDefined,
           "load: mode=dedup requires 'key' and 'textCol'")
         l.dedupThreshold.foreach(t => require(t > 0.0 && t <= 1.0,
@@ -226,8 +225,6 @@ object PipelineSpec {
           s"load: dedupShingleN must be >= 1, got $n"))
       }
       if (l.mode == "knn") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=knn supports parquet targets only")
         require(l.key.isDefined && l.vecCol.isDefined &&
           (l.centroids.isDefined != l.centroidsBase.isDefined),
           "load: mode=knn requires 'key', 'vecCol' and exactly one of " +
@@ -242,8 +239,6 @@ object PipelineSpec {
           s"load: knnProbe must be >= 1, got $p"))
       }
       if (l.mode == "ivf") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=ivf supports parquet targets only")
         require(l.key.isDefined && l.vecCol.isDefined &&
           (l.centroids.isDefined != l.centroidsBase.isDefined),
           "load: mode=ivf requires 'key', 'vecCol' and exactly one of " +
@@ -257,8 +252,6 @@ object PipelineSpec {
             s"transform view (known: ${known.mkString(", ")})"))
       }
       if (l.mode == "scd2") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=scd2 supports parquet targets only")
         require(l.key.isDefined && l.versionCol.isDefined &&
           l.scdAttrs.nonEmpty,
           "load: mode=scd2 requires 'key', 'versionCol' (the change-ts " +
@@ -277,14 +270,10 @@ object PipelineSpec {
           "load: mode=scd2 scdAttrs contains duplicates")
       }
       if (l.mode == "compact") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=compact supports parquet targets only")
         l.compactTargetBytes.foreach(b => require(b > 0,
           s"load: compactTargetBytes must be positive, got $b"))
       }
       if (l.mode == "zorder") {
-        require(l.format.equalsIgnoreCase("parquet"),
-          "load: mode=zorder supports parquet targets only")
         require(l.zorderBy.nonEmpty,
           "load: mode=zorder requires 'zorderBy' columns")
         l.zorderFiles.foreach(n => require(n >= 1,

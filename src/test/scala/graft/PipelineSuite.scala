@@ -93,6 +93,14 @@ class PipelineSuite extends SparkTestBase {
     val segs = back.select("c_mktsegment").distinct()
       .collect().map(_.getString(0))
     assert(segs.nonEmpty && segs.forall(s => s == s.toUpperCase))
+    // the dry run and lineage entry points resolve the same plugin stage
+    val parsed = PipelineSpec.fromJson(spec)
+    val Seq((target, plan)) = PipelineRunner.dryRun(spark, parsed)
+    assert(target == s"upper_seg -> parquet:$out/upper")
+    assert(plan.contains("upper(c_mktsegment"), plan.take(500))
+    val Seq((_, cols)) = PipelineRunner.lineage(spark, parsed)
+    assert(cols("c_mktsegment") == Set("customer.c_mktsegment"), cols)
+    assert(cols("c_custkey") == Set("customer.c_custkey"), cols)
   }
 
   test("T-P4: declarative upsert load merges latest-wins into a standing target") {
@@ -212,6 +220,66 @@ class PipelineSuite extends SparkTestBase {
         extracts = Seq(ExtractSpec("u", "values", "{}")),
         loads = Seq(LoadSpec("parquet", out, mode = "rollup",
           rollupKeys = Seq("k"), measures = Seq("s=median(x)")))))
+    }
+  }
+
+  test("swap-landing modes repair an interrupted swap through the runner") {
+    // (mode, batch schema, load onto a target dir, first batch, second batch)
+    val cases: Seq[(String, String, String => LoadSpec, Seq[String],
+        Seq[String])] = Seq(
+      ("upsert", "k BIGINT, v STRING, ver BIGINT",
+        LoadSpec("parquet", _, mode = "upsert", key = Some("k"),
+          versionCol = Some("ver")),
+        Seq("""{"k":1,"v":"a","ver":1}""", """{"k":2,"v":"b","ver":1}"""),
+        Seq("""{"k":2,"v":"b2","ver":2}""", """{"k":3,"v":"c","ver":1}""")),
+      ("cdc", "k BIGINT, v STRING, seq BIGINT, op STRING",
+        LoadSpec("parquet", _, mode = "cdc", key = Some("k"),
+          seqCols = Seq("seq", "op")),
+        Seq("""{"k":1,"v":"a","seq":1,"op":"I"}""",
+          """{"k":2,"v":"b","seq":1,"op":"I"}"""),
+        Seq("""{"k":2,"v":null,"seq":2,"op":"D"}""",
+          """{"k":3,"v":"c","seq":1,"op":"I"}""")),
+      ("rollup", "k STRING, x BIGINT",
+        LoadSpec("parquet", _, mode = "rollup", rollupKeys = Seq("k"),
+          measures = Seq("n=count", "s=sum(x)")),
+        Seq("""{"k":"a","x":10}""", """{"k":"b","x":5}"""),
+        Seq("""{"k":"a","x":30}""", """{"k":"c","x":1}""")),
+      ("scd2", "k BIGINT, city STRING, ts BIGINT",
+        LoadSpec("parquet", _, mode = "scd2", key = Some("k"),
+          versionCol = Some("ts"), scdAttrs = Seq("city")),
+        Seq("""{"k":1,"city":"ams","ts":10}""",
+          """{"k":2,"city":"nyc","ts":10}"""),
+        Seq("""{"k":1,"city":"ber","ts":20}""",
+          """{"k":3,"city":"sfo","ts":20}""")))
+    for ((mode, schema, load, b1, b2) <- cases) {
+      val base = tmp()
+      def land(dir: String, rows: Seq[String]): Long =
+        PipelineRunner.run(spark, PipelineSpec(s"swap_$mode",
+          extracts = Seq(ExtractSpec("batch", "values",
+            path = rows.mkString("\n"), schema = Some(schema))),
+          loads = Seq(load(dir)))).loads.head.rows
+      def contents(dir: String) =
+        spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+      def swapOld(dir: String) = new java.io.File(
+        base, s".${new java.io.File(dir).getName}__swap_old")
+      val clean = s"$base/clean"
+      land(clean, b1)
+      val cleanRows = land(clean, b2)
+      // crash after the target was moved aside, before the second rename
+      val moved = s"$base/moved"
+      land(moved, b1)
+      assert(new java.io.File(moved).renameTo(swapOld(moved)))
+      assert(land(moved, b2) == cleanRows, mode)
+      assert(contents(moved) == contents(clean), mode)
+      assert(!swapOld(moved).exists, mode)
+      // crash after the install, before the superseded copy was dropped:
+      // the stale copy (here emptied) must not win over the live one
+      val stale = s"$base/stale"
+      land(stale, b1)
+      spark.read.parquet(stale).limit(0).write.parquet(swapOld(stale).getPath)
+      assert(land(stale, b2) == cleanRows, mode)
+      assert(contents(stale) == contents(clean), mode)
+      assert(!swapOld(stale).exists, mode)
     }
   }
 
