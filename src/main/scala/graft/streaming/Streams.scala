@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -247,6 +248,48 @@ object Streams {
         col("p_ts"), col("c_ts"), col("p_value"))
   }
 
+  /** The one micro-batch drain of every `foreachBatch` runner below: run
+    * `body(batch, batchId)` on each micro-batch until the input available
+    * at start is processed (`Trigger.AvailableNow`), checkpointing at
+    * `<ckptBase>/_ckpt`. Returns the completed query.
+    *
+    * Spark re-runs a batch id whose sink write finished but whose commit
+    * did not, so every body keeps one replay layout (DESIGN.md
+    * "Streaming"): it overwrites its own `batch_<id>` / `v_<id>`
+    * directories, its standing read leaves its own directory out
+    * ([[batchDirs]] `except`) or reads the highest version strictly below
+    * its id, and it writes the store before the output and the main
+    * output before any sidecar. A replayed batch then rewrites identical
+    * rows. */
+  private def drain(df: DataFrame, ckptBase: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = df.writeStream.foreachBatch(body)
+      .option("checkpointLocation", s"$ckptBase/_ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** The child directories of `dir`, sorted by name; none when `dir` is
+    * missing. */
+  private def subdirs(spark: SparkSession, dir: String): Seq[Path] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+      .sortBy(_.getName)
+  }
+
+  /** The `batch_*` subdirectories of `dir`, sorted by name; none when
+    * `dir` is missing. `except` leaves out `batch_<except>`, the replaying
+    * batch's own landing. */
+  private def batchDirs(spark: SparkSession, dir: String,
+                        except: Option[Long] = None): Seq[String] =
+    subdirs(spark, dir).collect {
+      case p if p.getName.startsWith("batch_") &&
+          !except.exists(id => p.getName == s"batch_$id") => p.toString
+    }
+
   /** ST4 × L1 (VERDICT r2 item 4): streaming incremental exact dedup of a
     * document stream against a STANDING corpus digest store — the
     * production shape of a training-data ingest, where the dedup horizon
@@ -260,11 +303,9 @@ object Streams {
     * standing corpus by writing [[graft.ops.Dedup.contentDigests]] to
     * `digestDir/batch_seed` before starting.
     *
-    * Crash-safety: both writes go to per-batch-id directories in OVERWRITE
-    * mode, and a batch EXCLUDES ITS OWN digest dir from the anti-join side,
-    * so checkpoint replay after a failure regenerates identical output —
-    * the naive append-digests design would self-poison on replay (the
-    * replayed batch finds its own digests and drops every row).
+    * Replay-safe by the [[drain]] layout; the naive append-digests design
+    * would self-poison on replay (the replayed batch finds its own
+    * digests and drops every row).
     *
     * Scale: per-batch work is one anti-join on 32-byte digests (AQE
     * broadcasts the batch side when small); the standing set lives in
@@ -272,46 +313,31 @@ object Streams {
     * corpus size. Digest-dir compaction (many small batch dirs → one) is
     * an offline concern, same as any streaming file sink. */
   def runIncrementalDedup(docs: DataFrame, idCol: String, textCol: String,
-                          digestDir: String, outDir: String): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val dPath = new org.apache.hadoop.fs.Path(digestDir)
-        val fs = dPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(dPath)) Array.empty[String]
-          else fs.listStatus(dPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-              && s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        val prior =
-          if (priorDirs.nonEmpty) spark.read.parquet(priorDirs.toSeq: _*)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("__h",
-                org.apache.spark.sql.types.StringType))))
-        val kept = Dedup.incrementalExactDedup(batch, idCol, textCol, prior)
-          .cache()
-        kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        kept.select(sha2(col(textCol), 256).as("__h")).distinct()
-          .write.mode("overwrite").parquet(s"$digestDir/batch_$id")
-        kept.unpersist()
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                          digestDir: String, outDir: String): StreamingQuery =
+    drain(docs, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val priorDirs = batchDirs(spark, digestDir, except = Some(id))
+      val prior =
+        if (priorDirs.nonEmpty) spark.read.parquet(priorDirs: _*)
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("__h",
+              org.apache.spark.sql.types.StringType))))
+      val kept = Dedup.incrementalExactDedup(batch, idCol, textCol, prior)
+        .cache()
+      kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+      kept.select(sha2(col(textCol), 256).as("__h")).distinct()
+        .write.mode("overwrite").parquet(s"$digestDir/batch_$id")
+      kept.unpersist()
+    }
 
   /** ST × L17: streaming drift monitor — every micro-batch is PSI-scored
     * against a STANDING reference snapshot (the quality gate a
     * training-data ingest runs before a batch lands: did the incoming
     * value/length/score distribution move?). One psi row per (batch,
-    * column) lands in `outDir/batch_<id>` — per-batch-id overwrite, so
-    * checkpoint replay rewrites identical rows instead of duplicating
-    * them (the same idempotence layout as the dedup runners).
+    * column) lands in `outDir/batch_<id>`, replay-safe by the [[drain]]
+    * layout.
     *
     * Scale: the stream state store holds nothing (foreachBatch only);
     * per-batch cost is [[graft.ops.Drift.psi]]'s bucket counts — the
@@ -320,50 +346,36 @@ object Streams {
     * two-liner; swap in a cached reference DataFrame if it dominates. */
   def runDriftMonitor(cur: DataFrame, reference: DataFrame,
                       cols: Seq[String], outDir: String,
-                      buckets: Int = 10): StreamingQuery = {
-    val q = cur.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Drift.psi(reference, batch, cols, buckets)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                      buckets: Int = 10): StreamingQuery =
+    drain(cur, outDir) { (batch, id) =>
+      graft.ops.Drift.psi(reference, batch, cols, buckets)
+        .withColumn("batch_id", lit(id))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   /** ST20: streaming KS drift monitor — the distribution-shape
     * companion to [[runDriftMonitor]]'s PSI: each micro-batch is
     * two-sample-KS-tested per key against the STANDING reference
     * ([[graft.ops.Stats.ksTest]] with reference/batch as the two arms
     * of a tagged union), catching shifts PSI's fixed buckets smear
-    * out. Per-batch-id overwrite → checkpoint replay rewrites
-    * identical rows; reference is frozen (the monitor defines drift
-    * AGAINST a pinned baseline — re-baselining is an offline
-    * decision, not a side effect). State store holds nothing. */
+    * out. Replay-safe by the [[drain]] layout; reference is frozen (the
+    * monitor defines drift AGAINST a pinned baseline — re-baselining is
+    * an offline decision, not a side effect). State store holds
+    * nothing. */
   def runKsDriftMonitor(cur: DataFrame, reference: DataFrame,
                         keyCol: String, valueCol: String,
-                        outDir: String): StreamingQuery = {
-    val q = cur.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val tagged = reference
-          .select(col(keyCol), col(valueCol), lit("ref").as("__side"))
-          .unionByName(batch.select(col(keyCol), col(valueCol),
-            lit("cur").as("__side")))
-        graft.ops.Stats.ksTest(tagged, keyCol,
-            col("__side") === "ref", col("__side") === "cur",
-            col(valueCol))
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                        outDir: String): StreamingQuery =
+    drain(cur, outDir) { (batch, id) =>
+      val tagged = reference
+        .select(col(keyCol), col(valueCol), lit("ref").as("__side"))
+        .unionByName(batch.select(col(keyCol), col(valueCol),
+          lit("cur").as("__side")))
+      graft.ops.Stats.ksTest(tagged, keyCol,
+          col("__side") === "ref", col("__side") === "cur",
+          col(valueCol))
+        .withColumn("batch_id", lit(id))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   /** ST27: streaming calibration monitor — each micro-batch of scored
     * outcomes lands ONE row of [[graft.ops.Stats.hosmerLemeshow]]
@@ -371,29 +383,22 @@ object Streams {
     * .expectedCalibrationError]]'s magnitude — the model-monitoring
     * twin of [[runDriftMonitor]]: drift watches the INPUTS, this
     * watches whether the model's scores still mean what they say.
-    * Stateless foreachBatch; per-batch-id overwrite → checkpoint
-    * replay rewrites identical rows; the bin spec is frozen by the
-    * caller (re-binning is an offline decision, the drift-monitor
-    * reference discipline). State store holds nothing. */
+    * Stateless foreachBatch, replay-safe by the [[drain]] layout; the
+    * bin spec is frozen by the caller (re-binning is an offline
+    * decision, the drift-monitor reference discipline). State store
+    * holds nothing. */
   def runCalibrationMonitor(cur: DataFrame, scoreCol: String,
                             positiveCol: String, bins: Int, lo: Double,
-                            hi: Double, outDir: String): StreamingQuery = {
-    val q = cur.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val hl = graft.ops.Stats.hosmerLemeshow(batch, col(scoreCol),
-          col(positiveCol), bins, lo, hi)
-        val ece = graft.ops.Stats.expectedCalibrationError(batch,
-          col(scoreCol), col(positiveCol), bins, lo, hi).select(col("ece"))
-        hl.crossJoin(org.apache.spark.sql.functions.broadcast(ece))
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                            hi: Double, outDir: String): StreamingQuery =
+    drain(cur, outDir) { (batch, id) =>
+      val hl = graft.ops.Stats.hosmerLemeshow(batch, col(scoreCol),
+        col(positiveCol), bins, lo, hi)
+      val ece = graft.ops.Stats.expectedCalibrationError(batch,
+        col(scoreCol), col(positiveCol), bins, lo, hi).select(col("ece"))
+      hl.crossJoin(org.apache.spark.sql.functions.broadcast(ece))
+        .withColumn("batch_id", lit(id))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   /** ST × L1++: streaming boilerplate-span excision against a FROZEN
     * boiler set — each micro-batch of documents is cleaned by
@@ -401,26 +406,19 @@ object Streams {
     * induced once over the seed corpus ([[graft.ops.Dedup
     * .boilerplateNgrams]]; the frozen-index discipline the IVF append
     * uses: no re-induction, ever, so a document cleans identically no
-    * matter which batch delivers it). Per-batch-id overwrite, so
-    * checkpoint replay rewrites identical rows.
+    * matter which batch delivers it). Replay-safe by the [[drain]]
+    * layout.
     *
     * Scale: state store holds nothing; the boiler table is the only
     * standing state and is corpus-frequency-pruned (grams seen in >=
     * minDf docs), orders of magnitude smaller than the corpus. */
   def runBoilerplateExcision(docs: DataFrame, idCol: String,
                              textCol: String, boiler: DataFrame,
-                             outDir: String, n: Int = 5): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Dedup.exciseNgrams(batch, idCol, textCol, boiler, n)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                             outDir: String, n: Int = 5): StreamingQuery =
+    drain(docs, outDir) { (batch, id) =>
+      graft.ops.Dedup.exciseNgrams(batch, idCol, textCol, boiler, n)
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   /** ST13 × L3+: streaming append into a STANDING IVF similarity index —
     * each micro-batch of embeddings is assigned to the frozen coarse
@@ -430,22 +428,14 @@ object Streams {
     * frozen-quantizer append discipline as the batch path — no refit,
     * ever — which is what keeps cell ids stable across years of
     * batches; queries read the union of batch dirs with
-    * [[graft.ops.Similarity.ivfTopKFromTables]]. Per-batch-id overwrite
-    * makes checkpoint replay idempotent (a replayed batch rewrites the
-    * identical rows). The stream state store holds nothing. */
+    * [[graft.ops.Similarity.ivfTopKFromTables]]. Replay-safe by the
+    * [[drain]] layout. The stream state store holds nothing. */
   def runIvfAppend(emb: DataFrame, idCol: String, vecCol: String,
-                   centroids: DataFrame, outDir: String): StreamingQuery = {
-    val q = emb.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Similarity.ivfAssign(batch, idCol, vecCol, centroids)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                   centroids: DataFrame, outDir: String): StreamingQuery =
+    drain(emb, outDir) { (batch, id) =>
+      graft.ops.Similarity.ivfAssign(batch, idCol, vecCol, centroids)
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   /** ST25 × L3+++++: streaming kNN-GRAPH append — [[graft.ops.Similarity.annJoin]]'s
     * stream twin (VERDICT r11 item 4): each micro-batch of embeddings
@@ -456,9 +446,8 @@ object Streams {
     * every arriving row gets its k nearest among everything admitted
     * up to and including its own batch (intra-batch neighbors count).
     * Edges land per-batch-id and the batch's assignments append for
-    * future batches; the standing read EXCLUDES the batch's own dir,
-    * so checkpoint replay recomputes against the identical standing
-    * set and overwrites identical rows. `excludeSelf = Some(true)`:
+    * future batches, replay-safe by the [[drain]] layout.
+    * `excludeSelf = Some(true)`:
     * the batch's ids ARE in the union corpus (one shared id space),
     * so annJoin's structural queries-eq-corpus derivation would
     * otherwise keep trivial self-edges. Earlier rows' edge lists are
@@ -470,37 +459,24 @@ object Streams {
                         outDir: String, k: Int, nprobe: Int,
                         cellSplits: Int = 0): StreamingQuery = {
     import graft.ops.Similarity
-    val q = emb.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val aPath = new org.apache.hadoop.fs.Path(assignDir)
-        val fs = aPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(aPath)) Array.empty[String]
-          else fs.listStatus(aPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-              && s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        val assigned = Similarity.ivfAssign(batch, idCol, vecCol, centroids)
-          .cache() // feeds the union corpus AND the assignment landing
-        val standing =
-          if (priorDirs.nonEmpty)
-            spark.read.parquet(priorDirs.toSeq: _*).select("id", "arr")
-              .unionByName(assigned.select("id", "arr"))
-          else assigned.select("id", "arr")
-        Similarity.annJoin(
-            batch.select(col(idCol).as("id"), col(vecCol).as("arr")),
-            standing, "id", "arr", centroids, k, nprobe, cellSplits,
-            excludeSelf = Some(true))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        assigned.write.mode("overwrite").parquet(s"$assignDir/batch_$id")
-        assigned.unpersist()
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+    drain(emb, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val priorDirs = batchDirs(spark, assignDir, except = Some(id))
+      val assigned = Similarity.ivfAssign(batch, idCol, vecCol, centroids)
+        .cache() // feeds the union corpus AND the assignment landing
+      val standing =
+        if (priorDirs.nonEmpty)
+          spark.read.parquet(priorDirs: _*).select("id", "arr")
+            .unionByName(assigned.select("id", "arr"))
+        else assigned.select("id", "arr")
+      Similarity.annJoin(
+          batch.select(col(idCol).as("id"), col(vecCol).as("arr")),
+          standing, "id", "arr", centroids, k, nprobe, cellSplits,
+          excludeSelf = Some(true))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+      assigned.write.mode("overwrite").parquet(s"$assignDir/batch_$id")
+      assigned.unpersist()
+    }
   }
 
   /** ST26: streaming incremental SRP near-dedup — the sign-random-
@@ -512,9 +488,8 @@ object Streams {
     * [[graft.ops.Similarity.srpSignatures]] rows over the same frozen
     * plane table — signatures are plane-deterministic so they stay
     * mutually joinable across runs), writes its kept rows, and appends
-    * THEIR signatures for the next batch. Same exclude-own-dir +
-    * per-batch-id overwrite layout as the other tiers, so checkpoint
-    * replay is idempotent; the state store holds nothing and the
+    * THEIR signatures for the next batch. Replay-safe by the [[drain]]
+    * layout; the state store holds nothing and the
     * standing corpus is never re-read beyond its signature table.
     * `bucketSplits` is the inherited hot-bucket salt dial (r13 — 0 =
     * auto-profile the standing side per batch; pass the offline-
@@ -524,55 +499,35 @@ object Streams {
                   outDir: String, threshold: Double,
                   bucketSplits: Int = 0): StreamingQuery = {
     import graft.ops.Similarity
-    val q = emb.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val sPath = new org.apache.hadoop.fs.Path(sigDir)
-        val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(sPath)) Array.empty[String]
-          else fs.listStatus(sPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-              && s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        val standing =
-          if (priorDirs.nonEmpty) spark.read.parquet(priorDirs.toSeq: _*)
-          else Similarity.srpSignatures(batch.limit(0), idCol, vecCol,
-            planes, bandBits)
-        val (kept, keptSigs) = Similarity.incrementalSrpNearDup(batch,
-          standing, idCol, vecCol, planes, bandBits, threshold,
-          bucketSplits)
-        kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        keptSigs.write.mode("overwrite").parquet(s"$sigDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+    drain(emb, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val priorDirs = batchDirs(spark, sigDir, except = Some(id))
+      val standing =
+        if (priorDirs.nonEmpty) spark.read.parquet(priorDirs: _*)
+        else Similarity.srpSignatures(batch.limit(0), idCol, vecCol,
+          planes, bandBits)
+      val (kept, keptSigs) = Similarity.incrementalSrpNearDup(batch,
+        standing, idCol, vecCol, planes, bandBits, threshold,
+        bucketSplits)
+      kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+      keptSigs.write.mode("overwrite").parquet(s"$sigDir/batch_$id")
+    }
   }
 
   /** ST13's PQ sibling: stream micro-batches ENCODE against FROZEN
     * codebooks (the incremental-append discipline of a standing PQ
     * index — no retrain; `codebooks` is the persisted
     * [[graft.ops.Similarity.pqCodebooks]] table, reloaded once on the
-    * driver, m·kCent rows). Same per-batch-id overwrite layout as
-    * [[runIvfAppend]], so checkpoint replay rewrites identical rows;
-    * the encoded batches union with the standing encoded table for
-    * `pqTopK` queries. */
+    * driver, m·kCent rows). Replay-safe by the [[drain]] layout, like
+    * [[runIvfAppend]]; the encoded batches union with the standing
+    * encoded table for `pqTopK` queries. */
   def runPqAppend(emb: DataFrame, idCol: String, vecCol: String,
                   codebooks: DataFrame, outDir: String): StreamingQuery = {
     val cbs = graft.ops.Similarity.pqCodebooksFromTable(codebooks)
-    val q = emb.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Similarity.pqAssign(batch, idCol, vecCol, cbs)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+    drain(emb, outDir) { (batch, id) =>
+      graft.ops.Similarity.pqAssign(batch, idCol, vecCol, cbs)
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
   }
 
   /** ST14 × L16+: streaming incremental SEMANTIC dedup — the embedding
@@ -582,43 +537,28 @@ object Streams {
     * per-batch-id assignment table (frozen cells from `centroids` —
     * seed the table with `assignDir/batch_seed` written by
     * [[graft.ops.Similarity.ivfAssign]]), writes its kept rows, and
-    * appends THEIR assignments for the next batch. Same
-    * exclude-own-dir + per-batch-id overwrite layout as the other
-    * tiers, so checkpoint replay is idempotent; the state store holds
-    * nothing and the standing corpus is never re-scanned beyond its
-    * assignment table. */
+    * appends THEIR assignments for the next batch. Replay-safe by the
+    * [[drain]] layout; the state store holds nothing and the standing
+    * corpus is never re-scanned beyond its assignment table. */
   def runIncrementalSemDedup(emb: DataFrame, idCol: String, vecCol: String,
                              centroids: DataFrame, assignDir: String,
                              outDir: String,
                              threshold: Double = 0.45): StreamingQuery = {
     import graft.ops.Similarity
-    val q = emb.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val aPath = new org.apache.hadoop.fs.Path(assignDir)
-        val fs = aPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(aPath)) Array.empty[String]
-          else fs.listStatus(aPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-              && s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        val standing =
-          if (priorDirs.nonEmpty) spark.read.parquet(priorDirs.toSeq: _*)
-          else Similarity.ivfAssign(batch.limit(0), idCol, vecCol, centroids)
-        val (kept, _) = Similarity.incrementalSemDedup(batch, standing,
-          idCol, vecCol, threshold, centroids)
-        val keptC = kept.cache()
-        keptC.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        Similarity.ivfAssign(keptC, idCol, vecCol, centroids)
-          .write.mode("overwrite").parquet(s"$assignDir/batch_$id")
-        keptC.unpersist()
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+    drain(emb, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val priorDirs = batchDirs(spark, assignDir, except = Some(id))
+      val standing =
+        if (priorDirs.nonEmpty) spark.read.parquet(priorDirs: _*)
+        else Similarity.ivfAssign(batch.limit(0), idCol, vecCol, centroids)
+      val (kept, _) = Similarity.incrementalSemDedup(batch, standing,
+        idCol, vecCol, threshold, centroids)
+      val keptC = kept.cache()
+      keptC.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+      Similarity.ivfAssign(keptC, idCol, vecCol, centroids)
+        .write.mode("overwrite").parquet(s"$assignDir/batch_$id")
+      keptC.unpersist()
+    }
   }
 
   /** ST4 × L2: streaming incremental NEAR-dedup — [[runIncrementalDedup]]
@@ -629,8 +569,7 @@ object Streams {
     * with [[graft.ops.Dedup.minHashSignatures]] — same shingleN /
     * numHashTables, signatures are seed-deterministic so
     * they stay mutually joinable across runs), then appends its kept
-    * signatures. Same per-batch-id overwrite + exclude-own-dir layout as
-    * the exact tier, so checkpoint replay is idempotent.
+    * signatures. Replay-safe by the [[drain]] layout.
     *
     * COMPATIBILITY: `sigDir` must hold NATIVE (id, shs, sig) rows — a
     * directory seeded by the pre-round-6 MLlib signature path is not
@@ -643,33 +582,19 @@ object Streams {
   def runIncrementalNearDedup(docs: DataFrame, idCol: String, textCol: String,
                               sigDir: String, outDir: String,
                               shingleN: Int = 3, threshold: Double = 0.8,
-                              numHashTables: Int = 16): StreamingQuery = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val sPath = new org.apache.hadoop.fs.Path(sigDir)
-        val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(sPath)) Array.empty[String]
-          else fs.listStatus(sPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-              && s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        require(priorDirs.nonEmpty,
-          s"seed the standing corpus first: write minHashSignatures to $sigDir/batch_seed")
-        val corpusSigs = spark.read.parquet(priorDirs.toSeq: _*)
-        val (kept, keptSigs) = Dedup.incrementalMinHashNearDup(
-          batch, idCol, textCol, corpusSigs, shingleN, threshold,
-          numHashTables)
-        kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        keptSigs.write.mode("overwrite").parquet(s"$sigDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                              numHashTables: Int = 16): StreamingQuery =
+    drain(docs, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val priorDirs = batchDirs(spark, sigDir, except = Some(id))
+      require(priorDirs.nonEmpty,
+        s"seed the standing corpus first: write minHashSignatures to $sigDir/batch_seed")
+      val corpusSigs = spark.read.parquet(priorDirs: _*)
+      val (kept, keptSigs) = Dedup.incrementalMinHashNearDup(
+        batch, idCol, textCol, corpusSigs, shingleN, threshold,
+        numHashTables)
+      kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+      keptSigs.write.mode("overwrite").parquet(s"$sigDir/batch_$id")
+    }
 
   /** ST16: streaming incremental IMAGE dedup — [[runIncrementalNearDedup]]
     * with the perceptual-dHash tier in place of MinHash text signatures.
@@ -678,38 +603,23 @@ object Streams {
     * nearest-neighbor rescale), banded-Hamming joined against the hash
     * rows persisted by earlier batches plus the seeded corpus
     * (`sigDir/batch_seed`, written with `imageDHashes`), then appends
-    * its kept hashes. Same per-batch-id overwrite + exclude-own-dir
-    * layout, so checkpoint replay is idempotent. Non-image rows pass
-    * through to the output untouched. */
+    * its kept hashes. Replay-safe by the [[drain]] layout. Non-image
+    * rows pass through to the output untouched. */
   def runIncrementalImageDedup(media: DataFrame, sigDir: String,
                                outDir: String,
-                               maxDist: Int = 3): StreamingQuery = {
-    val q = media.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val sPath = new org.apache.hadoop.fs.Path(sigDir)
-        val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(sPath)) Array.empty[String]
-          else fs.listStatus(sPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-              && s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        require(priorDirs.nonEmpty,
-          s"seed the standing corpus first: write imageDHashes to $sigDir/batch_seed")
-        val corpusHashes = spark.read.parquet(priorDirs.toSeq: _*)
-        val (kept, keptHashes) = graft.ops.Multimodal.incrementalImageNearDup(
-          batch.as[graft.ops.Multimodal.MediaRow], corpusHashes, maxDist)
-        kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        keptHashes.write.mode("overwrite").parquet(s"$sigDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                               maxDist: Int = 3): StreamingQuery =
+    drain(media, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val priorDirs = batchDirs(spark, sigDir, except = Some(id))
+      require(priorDirs.nonEmpty,
+        s"seed the standing corpus first: write imageDHashes to $sigDir/batch_seed")
+      val corpusHashes = spark.read.parquet(priorDirs: _*)
+      val (kept, keptHashes) = graft.ops.Multimodal.incrementalImageNearDup(
+        batch.as[graft.ops.Multimodal.MediaRow], corpusHashes, maxDist)
+      kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+      keptHashes.write.mode("overwrite").parquet(s"$sigDir/batch_$id")
+    }
 
   /** Streaming upsert into a standing keyed table on plain parquet —
     * the landing mode of a CDC/update feed. Each micro-batch applies
@@ -717,10 +627,9 @@ object Streams {
     * batch, matched keys replaced, new keys inserted) against the most
     * recent table version and writes the result as `tableDir/v_<batchId>`.
     *
-    * Replay safety, same discipline as the incremental-dedup runners: a
-    * batch reads the highest version with id STRICTLY BELOW its own (the
-    * seed `v_seed` counts as -1) and overwrites its own dir, so a crash
-    * replay reproduces the identical version chain. Old versions are the
+    * Replay-safe by the [[drain]] layout: a batch reads the highest
+    * version with id STRICTLY BELOW its own (the seed `v_seed` counts as
+    * -1) and overwrites its own dir. Old versions are the
     * table's history — retention/compaction is an offline concern, as
     * with any versioned-table layout. Seed the table by writing the
     * initial state to `tableDir/v_seed`. */
@@ -760,34 +669,45 @@ object Streams {
         tsCol, attrCols))
 
   private def runVersionedMerge(updates: DataFrame, tableDir: String,
-      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
-    val q = updates.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val tPath = new org.apache.hadoop.fs.Path(tableDir)
-        val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val versions =
-          if (!fs.exists(tPath)) Array.empty[(Long, String)]
-          else fs.listStatus(tPath).collect {
-            case s if s.isDirectory && s.getPath.getName == "v_seed" =>
-              (-1L, s.getPath.toString)
-            case s if s.isDirectory && s.getPath.getName.startsWith("v_") &&
-                s.getPath.getName.drop(2).forall(_.isDigit) =>
-              (s.getPath.getName.drop(2).toLong, s.getPath.toString)
-          }
-        val prior = versions.filter(_._1 < id).sortBy(-_._1).headOption
-        require(prior.nonEmpty,
-          s"seed the standing table first: write the initial state to $tableDir/v_seed")
-        val current = spark.read.parquet(prior.get._2)
-        merge(current, batch)
-          .write.mode("overwrite").parquet(s"$tableDir/v_$id")
-        ()
+      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    drain(updates, tableDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val versions = subdirs(spark, tableDir).collect {
+        case p if p.getName == "v_seed" => (-1L, p.toString)
+        case p if p.getName.startsWith("v_") &&
+            p.getName.drop(2).forall(_.isDigit) =>
+          (p.getName.drop(2).toLong, p.toString)
       }
-      .option("checkpointLocation", s"$tableDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+      val prior = versions.filter(_._1 < id).sortBy(-_._1).headOption
+      require(prior.nonEmpty,
+        s"seed the standing table first: write the initial state to $tableDir/v_seed")
+      val current = spark.read.parquet(prior.get._2)
+      merge(current, batch)
+        .write.mode("overwrite").parquet(s"$tableDir/v_$id")
+    }
+
+  /** The store-and-refresh runner of the funnel, interval-merge and
+    * transitions feeds. Each micro-batch lands its `project`ion in
+    * `storeDir/batch_<id>`, unions it with the prior store, keeps the
+    * history of the batch's `key` values only (a semi-join), and writes
+    * `recompute` of that history, tagged `__batch` with the batch id, to
+    * `outDir/batch_<id>`. Per-batch cost is the affected keys' history,
+    * never the key universe; the state store holds nothing. */
+  private def refreshAffected(src: DataFrame, storeDir: String,
+      outDir: String, key: String)(project: DataFrame => DataFrame)(
+      recompute: DataFrame => DataFrame): StreamingQuery =
+    drain(src, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val b = project(batch)
+      b.write.mode("overwrite").parquet(s"$storeDir/batch_$id")
+      val prior = batchDirs(spark, storeDir, except = Some(id))
+      val store =
+        if (prior.isEmpty) b
+        else spark.read.parquet(prior: _*).unionByName(b)
+      recompute(store.join(b.select(key).distinct(), Seq(key), "left_semi"))
+        .withColumn("__batch", lit(id))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
 
   /** ST15: streaming incremental funnel — per-user ordered-funnel
     * snapshots maintained against a STANDING step-event store, the
@@ -799,50 +719,23 @@ object Streams {
     * an already-seen step-i event eligible (greedy-earliest times only
     * ever move EARLIER as history fills in). Exactness therefore needs
     * the step-event history, not just the current (t₁…tₖ) tuple — so
-    * each micro-batch appends its step-typed events to the store
-    * (`storeDir/batch_<id>`, overwrite-own-dir ⇒ checkpoint-replay
-    * idempotent), recomputes [[graft.ops.Funnel.funnel]] for AFFECTED
-    * users only (semi-join on the batch's users), and writes the
-    * refreshed snapshots tagged with the batch id; [[latestFunnel]]
-    * resolves last-write-wins per user.
+    * each micro-batch appends its step-typed events to the store and
+    * recomputes [[graft.ops.Funnel.funnel]] for AFFECTED users only
+    * ([[refreshAffected]]); [[latestFunnel]] resolves last-write-wins
+    * per user.
     *
-    * Scale: per-batch cost ∝ store rows of affected users (the store
-    * holds only funnel-step events — a projection of the log), never
-    * the full user base; the stream state store holds nothing. */
+    * Scale: the store holds only funnel-step events — a projection of
+    * the log. */
   def runIncrementalFunnel(events: DataFrame, userCol: String,
                            typeCol: String, tsCol: String,
                            steps: Seq[String], storeDir: String,
                            outDir: String,
-                           maxGap: Option[String] = None): StreamingQuery = {
-    val q = events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val relevant = batch.filter(col(typeCol).isin(steps: _*))
-          .select(col(userCol).as("user"), col(typeCol).as("step"),
-            col(tsCol).as("ts"))
-        relevant.write.mode("overwrite").parquet(s"$storeDir/batch_$id")
-        val sPath = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior = fs.listStatus(sPath)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-            && s.getPath.getName != s"batch_$id")
-          .map(_.getPath.toString)
-        val store =
-          if (prior.isEmpty) relevant
-          else spark.read.parquet(prior.toSeq: _*).unionByName(relevant)
-        val affected = relevant.select("user").distinct()
-        graft.ops.Funnel.funnel(
-            store.join(affected, Seq("user"), "left_semi"),
-            "user", "step", "ts", steps, maxGap)
-          .withColumn("__batch", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                           maxGap: Option[String] = None): StreamingQuery =
+    refreshAffected(events, storeDir, outDir, "user")(
+      _.filter(col(typeCol).isin(steps: _*))
+        .select(col(userCol).as("user"), col(typeCol).as("step"),
+          col(tsCol).as("ts")))(
+      graft.ops.Funnel.funnel(_, "user", "step", "ts", steps, maxGap))
 
   /** ST21: streaming incremental interval stitching — per-key merged
     * activity islands ([[graft.ops.Intervals.mergeIntervals]])
@@ -850,43 +743,16 @@ object Streams {
     * a state-machine formulation is NOT exact under out-of-order
     * arrival: a late span can bridge two previously-separate islands,
     * so exactness needs the span history. Each micro-batch appends its
-    * spans (`storeDir/batch_<id>`, overwrite-own-dir ⇒ replay
-    * idempotent), re-merges AFFECTED keys only (semi-join on the
-    * batch's keys), and writes the refreshed island snapshots tagged
-    * with the batch id; [[latestIntervals]] resolves whole-latest-
-    * snapshot-wins per key (an island row set is only valid
-    * atomically). Per-batch cost ∝ affected keys' span history, never
-    * the key universe; the state store holds nothing. */
+    * spans and re-merges AFFECTED keys only ([[refreshAffected]]);
+    * [[latestIntervals]] resolves whole-latest-snapshot-wins per key
+    * (an island row set is only valid atomically). */
   def runIntervalMerge(spans: DataFrame, keyCol: String, startCol: String,
                        endCol: String, tieCol: String, storeDir: String,
-                       outDir: String): StreamingQuery = {
-    val q = spans.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(keyCol).as("k"), col(startCol).as("s"),
-          col(endCol).as("e"), col(tieCol).as("o"))
-        b.write.mode("overwrite").parquet(s"$storeDir/batch_$id")
-        val sPath = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior = fs.listStatus(sPath)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-            && s.getPath.getName != s"batch_$id")
-          .map(_.getPath.toString)
-        val store =
-          if (prior.isEmpty) b
-          else spark.read.parquet(prior.toSeq: _*).unionByName(b)
-        val affected = b.select("k").distinct()
-        graft.ops.Intervals.mergeIntervals(
-            store.join(affected, Seq("k"), "left_semi"), "k", "s", "e", "o")
-          .withColumn("__batch", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                       outDir: String): StreamingQuery =
+    refreshAffected(spans, storeDir, outDir, "k")(
+      _.select(col(keyCol).as("k"), col(startCol).as("s"),
+        col(endCol).as("e"), col(tieCol).as("o")))(
+      graft.ops.Intervals.mergeIntervals(_, "k", "s", "e", "o"))
 
   /** Current island table from [[runIntervalMerge]] snapshots:
     * per key, ALL rows of the key's latest batch (an island set is
@@ -908,50 +774,31 @@ object Streams {
     * side). Each micro-batch splits into ΔA/ΔB, lands them in the
     * sides' batch-dir stores, and appends exactly
     * [[graft.ops.Rollup.joinDelta]] (ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB) to the view
-    * — the standing A ⋈ B recompute never happens. Standing sides read
-    * every batch dir EXCEPT the current id (overwrite-own-dir ⇒
-    * checkpoint replay rewrites identical rows, appends nothing
-    * twice). Append-only semantics, like the batch operator; compose
-    * with the CDC tombstone landing for upserts. [[currentJoinView]]
-    * reads the accumulated view. */
+    * — the standing A ⋈ B recompute never happens. Replay-safe by the
+    * [[drain]] layout (the standing sides leave the current id out), so
+    * a replay appends nothing twice. Append-only semantics, like the
+    * batch operator; compose with the CDC tombstone landing for upserts.
+    * [[currentJoinView]] reads the accumulated view. */
   def runJoinView(changes: DataFrame, sideCol: String, aSide: String,
                   key: String, aCols: Seq[String], bCols: Seq[String],
                   aDir: String, bDir: String,
-                  viewDir: String): StreamingQuery = {
-    val q = changes.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        def prior(dir: String): Seq[String] = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p)) Seq.empty
-          else fs.listStatus(p).collect {
-            case s if s.isDirectory &&
-                s.getPath.getName.startsWith("batch_") &&
-                s.getPath.getName != s"batch_$id" => s.getPath.toString
-          }.toSeq
-        }
-        val da = batch.filter(col(sideCol) === aSide)
-          .select(col(key) +: aCols.map(col): _*)
-        val db = batch.filter(col(sideCol) =!= aSide)
-          .select(col(key) +: bCols.map(col): _*)
-        da.write.mode("overwrite").parquet(s"$aDir/batch_$id")
-        db.write.mode("overwrite").parquet(s"$bDir/batch_$id")
-        val aPrior = prior(aDir)
-        val bPrior = prior(bDir)
-        val a = if (aPrior.isEmpty) da.limit(0)
-          else spark.read.parquet(aPrior: _*)
-        val b = if (bPrior.isEmpty) db.limit(0)
-          else spark.read.parquet(bPrior: _*)
-        graft.ops.Rollup.joinDelta(a, da, b, db, key)
-          .write.mode("overwrite").parquet(s"$viewDir/batch_$id")
-        ()
+                  viewDir: String): StreamingQuery =
+    drain(changes, viewDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val da = batch.filter(col(sideCol) === aSide)
+        .select(col(key) +: aCols.map(col): _*)
+      val db = batch.filter(col(sideCol) =!= aSide)
+        .select(col(key) +: bCols.map(col): _*)
+      da.write.mode("overwrite").parquet(s"$aDir/batch_$id")
+      db.write.mode("overwrite").parquet(s"$bDir/batch_$id")
+      def standing(dir: String, delta: DataFrame): DataFrame = {
+        val prior = batchDirs(spark, dir, except = Some(id))
+        if (prior.isEmpty) delta.limit(0) else spark.read.parquet(prior: _*)
       }
-      .option("checkpointLocation", s"$viewDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+      graft.ops.Rollup.joinDelta(standing(aDir, da), da,
+          standing(bDir, db), db, key)
+        .write.mode("overwrite").parquet(s"$viewDir/batch_$id")
+    }
 
   /** The accumulated join view from [[runJoinView]] batch appends. */
   def currentJoinView(spark: SparkSession, viewDir: String): DataFrame =
@@ -963,44 +810,18 @@ object Streams {
     * sequence and rewrites two adjacent transitions, which a
     * count-only running state cannot undo but the stored history can.
     * Per-user counts are ADDITIVE across users, so each micro-batch
-    * recomputes only the batch's users from the store and snapshots
-    * their per-user rows ([[graft.ops.Funnel.userTransitions]]) tagged
-    * with the batch id; [[latestTransitions]] folds the last-write-wins
-    * per-user rows into the global matrix. Same overwrite-own-dir
-    * replay idempotence as ST15. */
+    * recomputes only the batch's users from the store
+    * ([[refreshAffected]]) and snapshots their per-user rows
+    * ([[graft.ops.Funnel.userTransitions]]); [[latestTransitions]]
+    * folds the last-write-wins per-user rows into the global matrix. */
   def runIncrementalTransitions(events: DataFrame, userCol: String,
                                 typeCol: String, tsCol: String,
                                 tieCol: String, storeDir: String,
-                                outDir: String): StreamingQuery = {
-    val q = events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val relevant = batch.select(col(userCol).as("user"),
-          col(typeCol).as("step"), col(tsCol).as("ts"),
-          col(tieCol).as("tie"))
-        relevant.write.mode("overwrite").parquet(s"$storeDir/batch_$id")
-        val sPath = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior = fs.listStatus(sPath)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_")
-            && s.getPath.getName != s"batch_$id")
-          .map(_.getPath.toString)
-        val store =
-          if (prior.isEmpty) relevant
-          else spark.read.parquet(prior.toSeq: _*).unionByName(relevant)
-        val affected = relevant.select("user").distinct()
-        graft.ops.Funnel.userTransitions(
-            store.join(affected, Seq("user"), "left_semi"),
-            "user", "step", "ts", "tie")
-          .withColumn("__batch", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                                outDir: String): StreamingQuery =
+    refreshAffected(events, storeDir, outDir, "user")(
+      _.select(col(userCol).as("user"), col(typeCol).as("step"),
+        col(tsCol).as("ts"), col(tieCol).as("tie")))(
+      graft.ops.Funnel.userTransitions(_, "user", "step", "ts", "tie"))
 
   /** The global transition matrix from [[runIncrementalTransitions]]
     * output: each user's ENTIRE latest snapshot wins (per-row
@@ -1019,26 +840,19 @@ object Streams {
   /** ST18: streaming incremental rollup — maintain per-key mergeable
     * aggregate state ([[graft.ops.Rollup]]) from a stream without ever
     * rescanning raw history. Each micro-batch folds to its own state
-    * table (`storeDir/batch_$id`, overwrite-own-dir → checkpoint-replay
-    * idempotent, the ST13/ST15 convention); the standing rollup is the
+    * table (`storeDir/batch_$id`, replay-safe by the [[drain]] layout);
+    * the standing rollup is the
     * monoid fold of all batch states ([[currentRollup]]) — one shuffle
     * over pre-aggregated rows, so a replayed or out-of-order batch can
     * never double-count and the result is independent of arrival order
     * (asserted ≡ the batch operator in StreamingSuite). */
   def runRollup(raw: DataFrame, keys: Seq[String],
                 measures: Seq[graft.ops.Rollup.Measure],
-                storeDir: String): StreamingQuery = {
-    val q = raw.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Rollup.aggregate(batch, keys, measures)
-          .write.mode("overwrite").parquet(s"$storeDir/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$storeDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+                storeDir: String): StreamingQuery =
+    drain(raw, storeDir) { (batch, id) =>
+      graft.ops.Rollup.aggregate(batch, keys, measures)
+        .write.mode("overwrite").parquet(s"$storeDir/batch_$id")
+    }
 
   /** ST28: streaming IVF assignment landing — the streaming twin of
     * the declarative `mode="ivf"` load (and the assignment half of
@@ -1048,9 +862,8 @@ object Streams {
     * pass ([[graft.ops.Similarity.ivfAssign]] — cell ids stay stable
     * forever; re-training is the versioned
     * [[graft.ops.IndexLifecycle]]), optionally PQ-encodes with frozen
-    * codebooks, and lands `outDir/batch_<id>` — per-batch-id
-    * overwrite, so checkpoint replay is idempotent and the state
-    * store holds nothing.
+    * codebooks, and lands `outDir/batch_<id>`, replay-safe by the
+    * [[drain]] layout; the state store holds nothing.
     *
     * GROWTH NOTE (ADVICE r14): the admit-once anti-join re-reads
     * every prior `batch_*` dir on each micro-batch, so per-batch cost
@@ -1104,12 +917,7 @@ object Streams {
     * unknowable). Bounded driver read: one min() row. */
   private def standingVersion(spark: SparkSession,
                               outDir: String): Option[Int] = {
-    val oPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = oPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(oPath)) return None
-    val dirs = fs.listStatus(oPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_"))
-      .map(_.getPath.toString)
+    val dirs = batchDirs(spark, outDir)
     if (dirs.isEmpty) return None
     // mergeSchema: with a MIXED legacy+versioned layout the inferred
     // schema would otherwise come from an arbitrary file — if it carries
@@ -1118,7 +926,7 @@ object Streams {
     // refuse-on-mismatch guard silently pass over un-re-keyed legacy
     // dirs (ADVICE r15). A null-row count now maps mixed layouts to the
     // legacy Some(-1) refusal, same as a fully-legacy layout.
-    val st = spark.read.option("mergeSchema", "true").parquet(dirs.toSeq: _*)
+    val st = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
     if (!st.columns.contains("index_version")) Some(-1)
     else {
       val r = st.agg(
@@ -1138,39 +946,34 @@ object Streams {
                                codebooks: Option[Array[Array[Array[Double]]]],
                                verOpt: Option[Int]): StreamingQuery = {
     import graft.ops.Similarity
-    val q = emb.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val oPath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = oPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(oPath)) Array.empty[String]
-          else fs.listStatus(oPath)
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("batch_") &&
-              s.getPath.getName != s"batch_$id")
-            .map(_.getPath.toString)
-        val fresh =
-          if (priorDirs.nonEmpty)
-            batch.join(spark.read.parquet(priorDirs.toSeq: _*)
-              .select(col("id").as(idCol)), Seq(idCol), "left_anti")
-          else batch
-        val assigned0 = Similarity.ivfAssign(fresh, idCol, vecCol, centroids)
-        val assigned1 = codebooks match {
-          case Some(cb) => Similarity.withPqCode(assigned0, "arr", cb)
-          case None => assigned0
-        }
-        val assigned = verOpt match {
-          case Some(v) => assigned1.withColumn("index_version", lit(v))
-          case None => assigned1
-        }
-        assigned.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-        ()
+    drain(emb, outDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      val priorDirs = batchDirs(spark, outDir, except = Some(id))
+      val fresh =
+        if (priorDirs.nonEmpty)
+          batch.join(spark.read.parquet(priorDirs: _*)
+            .select(col("id").as(idCol)), Seq(idCol), "left_anti")
+        else batch
+      val assigned0 = Similarity.ivfAssign(fresh, idCol, vecCol, centroids)
+      val assigned1 = codebooks match {
+        case Some(cb) => Similarity.withPqCode(assigned0, "arr", cb)
+        case None => assigned0
       }
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+      val assigned = verOpt match {
+        case Some(v) => assigned1.withColumn("index_version", lit(v))
+        case None => assigned1
+      }
+      assigned.write.mode("overwrite").parquet(s"$outDir/batch_$id")
+    }
+  }
+
+  /** Delete the folded `batch_*` dirs of a compaction, all but
+    * `batch_compacted` itself; returns how many were deleted. */
+  private def dropFolded(spark: SparkSession, dirs: Seq[String]): Int = {
+    val stale = dirs.map(new Path(_)).filter(_.getName != "batch_compacted")
+    stale.foreach(d =>
+      d.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(d, true))
+    stale.length
   }
 
   /** Fold a versioned feed's `batch_*` dirs into ONE standing
@@ -1189,15 +992,9 @@ object Streams {
     import graft.ops.Similarity
     val (v, cents, _) =
       graft.ops.IndexLifecycle.resolve(spark, centroidsBase)
-    val oPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = oPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(oPath)) return v
-    val dirs = fs.listStatus(oPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_"))
-      .map(_.getPath)
+    val dirs = batchDirs(spark, outDir)
     if (dirs.isEmpty) return v
-    val merged = spark.read.parquet(dirs.map(_.toString).toSeq: _*)
-      .dropDuplicates("id")
+    val merged = spark.read.parquet(dirs: _*).dropDuplicates("id")
     val reassigned0 = Similarity.ivfAssign(
       merged.select(col("id"), col("arr")), "id", "arr", cents)
     val reassigned = (codebooks match {
@@ -1206,8 +1003,7 @@ object Streams {
     }).withColumn("index_version", lit(v))
     graft.sources.Sinks.writeParquetSwapped(
       reassigned, s"$outDir/batch_compacted")
-    dirs.filter(_.getName != "batch_compacted")
-      .foreach(d => fs.delete(d, true))
+    dropFolded(spark, dirs)
     v
   }
 
@@ -1227,19 +1023,11 @@ object Streams {
     * idempotent). Returns the number of dirs folded away. */
   def compactIvfAssign(spark: SparkSession, outDir: String,
                        idCol: String = "id"): Int = {
-    val oPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = oPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(oPath)) return 0
-    val dirs = fs.listStatus(oPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_"))
-      .map(_.getPath).sortBy(_.getName)
+    val dirs = batchDirs(spark, outDir)
     if (dirs.length <= 1) return 0
-    val merged = spark.read.parquet(dirs.map(_.toString).toSeq: _*)
-      .dropDuplicates(idCol)
+    val merged = spark.read.parquet(dirs: _*).dropDuplicates(idCol)
     graft.sources.Sinks.writeParquetSwapped(merged, s"$outDir/batch_compacted")
-    val stale = dirs.filter(_.getName != "batch_compacted")
-    stale.foreach(d => fs.delete(d, true))
-    stale.length
+    dropFolded(spark, dirs)
   }
 
   /** The standing rollup from [[runRollup]] output: merge every batch's
@@ -1273,19 +1061,12 @@ object Streams {
   }
 
   /** ST7: the micro-batch bridge — every micro-batch DataFrame goes
-    * through a full batch write (parquet here; any batch sink works).
+    * through a full batch write (parquet here; any batch sink works),
+    * overwriting its own `batch_<id>` so a replayed batch lands once.
     * This is exactly the reference's Kafka-fed micro-batch model. */
-  def runForeachBatch(df: DataFrame, outDir: String): StreamingQuery = {
-    val q = df.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("append").parquet(s"$outDir/batch_$id")
-      }
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+  def runForeachBatch(df: DataFrame, outDir: String): StreamingQuery =
+    drain(df, outDir)((batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_$id"))
 
   /** File sink in append mode (ST7b). */
   def runToFiles(df: DataFrame, outDir: String): StreamingQuery = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{EtlSession, Tables}
 import graft.ops.Similarity
+import graft.tools.BenchKit.time
 
 /** ANN benchmark at a volume that exercises pruning (VERDICT r6 #2):
   * the sf0.1 embeddings fixture is 2,000 rows — small enough that every
@@ -28,19 +29,8 @@ import graft.ops.Similarity
 object AnnBench {
 
   /** splitmix64 of (a, b) → double in [-1, 1]. Pure, seedless. */
-  private def h(a: Long, b: Long): Double = {
-    var z = a * 0x9E3779B97F4A7C15L + b * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z = z ^ (z >>> 31)
-    z.toDouble / Long.MaxValue
-  }
-
-  private def time[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = body
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
+  private def h(a: Long, b: Long): Double =
+    BenchKit.h(a, b).toDouble / Long.MaxValue
 
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select("q", "v").collect()

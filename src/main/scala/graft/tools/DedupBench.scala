@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EtlSession
 import graft.ops.Dedup
+import graft.tools.BenchKit.{h, time}
 
 /** Dedup benchmark at a volume that exercises the LSH banding: the
   * sf0.1 documents fixture is 5,000 rows, so q78/q79's bench figures
@@ -24,20 +25,6 @@ import graft.ops.Dedup
   * operating point matches the (1−s^r)^b analysis.
   */
 object DedupBench {
-
-  private def h(a: Long, b: Long): Long = {
-    var z = a * 0x9E3779B97F4A7C15L + b * 0xD1B54A32D192ED03L +
-      0x8CB92BA72F3D8DD7L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  private def time[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = body
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("DEDUP_DOCS", "100000").toInt

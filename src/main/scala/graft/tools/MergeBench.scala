@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EtlSession
 import graft.ops.{Funnel, Merge}
+import graft.tools.BenchKit.{abBench, h}
 
 /** Warehouse-maintenance family at volume — the round-10 rewrites
   * (scd2Apply's one-generator emit, upsert's latest-cut, cohortLtv's
@@ -16,32 +17,6 @@ import graft.ops.{Funnel, Merge}
   *   java -cp ... graft.tools.MergeBench     # MERGE_ROWS=10000000 default
   */
 object MergeBench {
-
-  private def h(a: Long, b: Long): Long = {
-    var z = a * 0x9E3779B97F4A7C15L + b * 0xD1B54A32D192ED03L +
-      0x8CB92BA72F3D8DD7L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  private def time[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = body
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Alternating min-of-2 for an A/B pair — the box throttles
-    * unpredictably (single-shot arms observed swinging 4–15× between
-    * runs), so each arm runs twice INTERLEAVED with its rival and
-    * reports its min: a throttle segment then penalizes both arms
-    * equally instead of whichever ran inside it. */
-  private def abBench(a: => Long, b: => Long)
-      : (Long, Double, Long, Double) = {
-    val (ra1, ta1) = time(a); val (rb1, tb1) = time(b)
-    val (_, ta2) = time(a); val (_, tb2) = time(b)
-    (ra1, math.min(ta1, ta2), rb1, math.min(tb1, tb2))
-  }
 
   def main(args: Array[String]): Unit = {
     val nRows = sys.env.getOrElse("MERGE_ROWS", "10000000").toLong

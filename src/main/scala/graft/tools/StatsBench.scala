@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EtlSession
 import graft.ops.{Association, Resample, Stats}
+import graft.tools.BenchKit.{h, time}
 
 /** Stats-tier benchmark at a volume the fixtures cannot reach: the
   * q232–q282 family is fixture-priced (sf0.1 ≈ 600k lineitem rows), so
@@ -45,20 +46,6 @@ import graft.ops.{Association, Resample, Stats}
   * Prints ONE JSON line; numbers recorded in BASELINE.md §v11/§v12.
   */
 object StatsBench {
-
-  private def h(a: Long, b: Long): Long = {
-    var z = a * 0x9E3779B97F4A7C15L + b * 0xD1B54A32D192ED03L +
-      0x8CB92BA72F3D8DD7L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  private def time[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = body
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   /** Full evaluation through the noop sink — the Bench discipline.
     * NEVER time `.count()` on a multi-branch stats output: Catalyst

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EtlSession
 import graft.ops.{Indexing, TextAnalysis, Vocab}
+import graft.tools.BenchKit.{h, time}
 
 /** Text-curation tier at volume — the LLM-data-pipeline stages priced
   * beyond the 600-doc fixture: 1M synthetic documents (~60 tokens each,
@@ -20,20 +21,10 @@ import graft.ops.{Indexing, TextAnalysis, Vocab}
   */
 object TextBench {
 
-  private def h(a: Long, b: Long): Long = {
-    var z = a * 0x9E3779B97F4A7C15L + b * 0xD1B54A32D192ED03L +
-      0x8CB92BA72F3D8DD7L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** min-of-2: the second run is steady-state (page cache + JIT); a
     * throttle segment then cannot masquerade as an op cost. */
   private def time2(body: => Long): (Long, Double) = {
-    def once = { val t0 = System.nanoTime(); val r = body
-      (r, (System.nanoTime() - t0) / 1e9) }
-    val (r, t1) = once; val (_, t2) = once
+    val (r, t1) = time(body); val (_, t2) = time(body)
     (r, math.min(t1, t2))
   }
 

@@ -413,6 +413,9 @@ class ScaleSuite extends SparkTestBase {
   }
 
   test("GraftExtensions injects functions into a fresh session (no Registry call)") {
+    // create the suite's lazy shared session first: forced only after the
+    // clear below, it would resolve to the new session itself
+    val shared = spark
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
@@ -442,8 +445,8 @@ class ScaleSuite extends SparkTestBase {
         .collect()(0).getDouble(0)
       assert(adc == 5.0 + 3.0)
     } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
     }
   }
 

@@ -17,6 +17,7 @@ import graft.streaming.Streams
 class StreamingSuite extends SparkTestBase {
 
   import spark.implicits._
+  import StreamingSuite.CrashCase
 
   private lazy val batchEvents: DataFrame = {
     val df = Tables.events(spark, sf0001); df.cache(); df.count(); df
@@ -1533,4 +1534,109 @@ class StreamingSuite extends SparkTestBase {
     assert(repaired.count() == 220L &&
       repaired.select("id").distinct().count() == 220L)
   }
+
+  private lazy val crashEmb = Tables.table(spark, sf0001, "embeddings")
+    .select("vec_id", "embedding")
+  private lazy val crashCents = crashEmb.filter(col("vec_id") < 8)
+    .select(col("vec_id").cast("int").as("cell"),
+      transform(col("embedding"), _.cast("double")).as("centroid"))
+  private lazy val crashDocs = Tables.table(spark, sf0001, "documents")
+    .select("doc_id", "text")
+  private lazy val crashCust = Tables.table(spark, sf0001, "customer")
+
+  private val crashCases = Seq(
+    // plain drain: nothing standing, the batch lands as it came
+    CrashCase("runForeachBatch", "out", Seq("out"),
+      () => (crashEmb.filter(col("vec_id") < 40),
+        crashEmb.filter(col("vec_id") >= 40 && col("vec_id") < 80)),
+      _ => (), (s, root) => Streams.runForeachBatch(s, s"$root/out")),
+    // exclude-own-dir: batch 1 carries a copy of a batch-0 document
+    CrashCase("runIncrementalDedup", "out", Seq("out", "digests"),
+      () => (crashDocs.filter(col("doc_id") >= 100 && col("doc_id") < 150),
+        crashDocs.filter(col("doc_id") >= 150 && col("doc_id") < 200)
+          .unionByName(crashDocs.filter(col("doc_id") === 100)
+            .withColumn("doc_id", lit(20000L)))),
+      root => graft.ops.Dedup.contentDigests(
+          crashDocs.filter(col("doc_id") < 100), "text")
+        .write.parquet(s"$root/digests/batch_seed"),
+      (s, root) => Streams.runIncrementalDedup(s, "doc_id", "text",
+        s"$root/digests", s"$root/out")),
+    // strictly-below-version: v_1 must merge onto v_0, not onto itself
+    CrashCase("runUpsert", "table", Seq("table"),
+      () => (crashCust.filter(col("c_custkey") % 3 === 0)
+          .select(col("c_custkey").as("k"), lit("B1").as("seg"),
+            lit(1L).as("ver")),
+        crashCust.filter(col("c_custkey") % 6 === 0)
+          .select(col("c_custkey").as("k"), lit("B2").as("seg"),
+            lit(2L).as("ver"))),
+      root => crashCust.select(col("c_custkey").as("k"),
+          col("c_mktsegment").as("seg"), lit(0L).as("ver"))
+        .write.parquet(s"$root/table/v_seed"),
+      (s, root) => Streams.runUpsert(s, "k", "ver", s"$root/table")),
+    // store-and-refresh: batch 1's span bridges batch 0's islands
+    CrashCase("runIntervalMerge", "out", Seq("store", "out"),
+      () => (Seq((1L, 0L, 10L, 1L), (1L, 30L, 40L, 2L), (2L, 0L, 5L, 3L))
+          .toDF("k", "s", "e", "o"),
+        Seq((1L, 8L, 32L, 4L), (3L, 0L, 1L, 5L)).toDF("k", "s", "e", "o")),
+      _ => (), (s, root) => Streams.runIntervalMerge(s, "k", "s", "e", "o",
+        s"$root/store", s"$root/out")),
+    // admit-once: batch 1 overlaps the seed and batch 0
+    CrashCase("runIvfAssignAppend", "assign", Seq("assign"),
+      () => (crashEmb.filter(col("vec_id") >= 10 && col("vec_id") < 60),
+        crashEmb.filter(col("vec_id") >= 40 && col("vec_id") < 100)),
+      root => graft.ops.Similarity.ivfAssign(
+          crashEmb.filter(col("vec_id") < 20), "vec_id", "embedding",
+          crashCents)
+        .write.parquet(s"$root/assign/batch_seed"),
+      (s, root) => Streams.runIvfAssignAppend(s, "vec_id", "embedding",
+        crashCents, s"$root/assign")))
+
+  /** Each landed `batch_*` / `v_*` directory of `dir` with its rows,
+    * as a sorted multiset. */
+  private def landed(dir: String): Map[String, Seq[String]] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("batch_") || n.startsWith("v_"))
+      .map(n => n -> spark.read.parquet(s"$dir/$n").collect()
+        .map(_.toString).sorted.toSeq).toMap
+
+  crashCases.foreach { c =>
+    test(s"crash replay: ${c.runner} re-runs its uncommitted last batch " +
+        "to the same directories and rows") {
+      val root = Files.createTempDirectory(s"graft-crash-${c.runner}").toString
+      val (f1, f2) = c.inputs()
+      f1.coalesce(1).write.parquet(s"$root/src/f1")
+      f2.coalesce(1).write.parquet(s"$root/src/f2")
+      c.seed(root)
+      def stream() = spark.readStream.schema(f1.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$root/src/f*/*.parquet")
+      c.run(stream(), root)
+      val before = c.outputs.map(o => o -> landed(s"$root/$o")).toMap
+      // the crash: the last batch's sink writes finished, its commit did not
+      val commits = new java.io.File(s"$root/${c.ckpt}/_ckpt/commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(last == 1L, s"two input files must make two batches, got ${last + 1}")
+      assert(new java.io.File(commits, s"$last").delete())
+      new java.io.File(commits, s".$last.crc").delete()
+      c.run(stream(), root)
+      assert(new java.io.File(commits, s"$last").exists,
+        s"batch $last was not re-run")
+      val after = c.outputs.map(o => o -> landed(s"$root/$o")).toMap
+      def sizes(m: Map[String, Map[String, Seq[String]]]) =
+        m.map { case (o, ds) => o -> ds.map { case (d, r) => d -> r.size } }
+      val unchanged = after == before
+      assert(unchanged, s"replay changed the landing (rows per directory): " +
+        s"${sizes(before)} -> ${sizes(after)}")
+    }
+  }
+}
+
+object StreamingSuite {
+
+  /** One row per standing-read kind of the `foreachBatch` runners: its
+    * checkpoint base, the directories it lands (relative to the run's
+    * root), its two input files (one micro-batch each), the seed it needs
+    * and the call itself. */
+  final case class CrashCase(runner: String, ckpt: String,
+      outputs: Seq[String], inputs: () => (DataFrame, DataFrame),
+      seed: String => Unit, run: (DataFrame, String) => Unit)
 }
