@@ -11,6 +11,8 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on (runtime join re-selection, partition coalescing, skew split)
   *  - artifact isolation off ([[SharedCodegenPin]]), so every run of a
   *    streaming feed reuses the generated classes earlier runs compiled
+  *  - a codegen cache that holds a whole round of queries
+  *    ([[CodegenCachePin]])
   *  - custom expressions injected via [[GraftExtensions]] so pure-SQL
   *    users see `cosine_similarity`/`shingles`/`winnow`; the `geomean`
   *    UDAF is registered on top (no extensions hook for Aggregators)
@@ -37,6 +39,17 @@ object EtlSession {
   val SharedCodegenPin: Map[String, String] =
     Map("spark.sql.artifact.isolation.enabled" -> "false")
 
+  /** `spark.sql.codegen.cache.maxEntries=1000`. Spark's default of 100 is
+    * a Guava cache of 4 segments, each evicting on its own past ~25
+    * entries, so a round of 77 classes thrashed in some JVMs and not in
+    * others (which segment a class lands in changes per JVM): 19 classes
+    * recompiled every round, 30–50% more CPU. At 1000 a segment holds
+    * 250. It is a STATIC conf read once, when Spark's `CodeGenerator` is
+    * first loaded: it holds only when `create` builds the JVM's first
+    * session (a later `getOrCreate` keeps the running context's value). */
+  val CodegenCachePin: Map[String, String] =
+    Map("spark.sql.codegen.cache.maxEntries" -> "1000")
+
   def create(master: String = "local[*]",
              shufflePartitions: Int = Runtime.getRuntime.availableProcessors,
              appName: String = "graft"): SparkSession = {
@@ -50,6 +63,7 @@ object EtlSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
       .config(SharedCodegenPin)
+      .config(CodegenCachePin)
       .getOrCreate()
     functions.Registry.registerAll(spark) // adds geomean; skips injected
     spark

@@ -48,20 +48,20 @@ object ScanAudit {
     * collect ClassCastExceptions on them — so both plan families are
     * walked, counting FileSourceScanExec on the physical side and
     * HadoopFsRelation-backed LogicalRelation on the logical side.
-    * cache()/localCheckpoint cuts are opaque here BY DESIGN — hiding
-    * the upstream scan is exactly what the cut is for (a cached frame
-    * is SCANNED once however many branches consume it, so the rule-3
-    * duplicate-COST audit must not see through it).
+    * [[graft.ops.Cut]]'s cuts of both kinds are opaque here BY DESIGN —
+    * hiding the upstream scan is exactly what the cut is for (a cut
+    * frame is computed once however many branches consume it, so the
+    * rule-3 duplicate-COST audit must not see through it).
     *
     * `throughCache = true` flips that for PROVENANCE questions (the
     * rule-4 same-frame-join detector — VERDICT r12 item 2): an
     * InMemoryTableScanExec / logical InMemoryRelation descends into
-    * its cachedPlan, so `.cache()` ahead of a quadratic self-join
+    * its cachedPlan, so a `Cut.rows` ahead of a quadratic self-join
     * cannot hide that both sides read the same base tables. The
     * descent attributes the CACHED plan's scans to every consumer —
     * wrong for cost counting, right for same-lineage detection.
-    * localCheckpoint cuts stay opaque in both modes (LogicalRDD
-    * truncates lineage physically — there is no plan left to walk). */
+    * `Cut.summary` cuts stay opaque in both modes (an eager checkpoint's
+    * LogicalRDD has no plan left to walk). */
   def scanCounts(p: SparkPlan,
                  throughCache: Boolean = false): Map[String, Int] = {
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]

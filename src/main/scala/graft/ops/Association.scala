@@ -37,13 +37,10 @@ object Association {
     require(maxBasket >= 1, s"maxBasket must be >= 1, got $maxBasket")
     val bk: Seq[Column] = basketCols.map(col)
     // the distinct basket-item table feeds FOUR consumers (the basket
-    // count action, singles, and both self-join sides) and Catalyst
-    // does not dedupe common subplans — uncut, the whole upstream
-    // (q192 feeds a sessionize window chain) re-plans per consumer
-    // (audited: 4 static events scans). cache(): row-scale
-    // multi-consumer frame, and the eager nBaskets count warms it.
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    val b0 = df.select(bk :+ col(itemCol).as("item"): _*).distinct().cache()
+    // count action, singles, and both self-join sides) — uncut, the
+    // whole upstream (q192 feeds a sessionize window chain) re-plans
+    // per consumer (audited: 4 static events scans)
+    val b0 = Cut.rows(df.select(bk :+ col(itemCol).as("item"): _*).distinct())
     val b =
       if (maxBasket == Int.MaxValue) b0
       else b0.withColumn("__r", row_number().over(
@@ -52,12 +49,11 @@ object Association {
             .orderBy(md5(concat_ws("#",
               bk.map(_.cast("string")) :+ col("item").cast("string"): _*)),
               col("item"))))
-        // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-        .filter(col("__r") <= maxBasket).drop("__r").cache()
+        .filter(col("__r") <= maxBasket).drop("__r").transform(Cut.rows)
     val nBaskets = b.select(bk: _*).distinct().count()
     // item-cardinality-bounded, consumed by BOTH direction joins
     val singles = b.groupBy("item").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val pairs = b.select(bk :+ col("item").as("item_a"): _*)
       .join(b.select(bk :+ col("item").as("item_b"): _*), basketCols)
       .filter(col("item_a") < col("item_b"))
@@ -115,13 +111,6 @@ object Association {
     // accident, not a guarantee (the r10 rank-desync bug), and uncut
     // the static plan re-reads lineitem⋈orders six times; the cache
     // makes the single-pass shape explicit at zero measured cost.
-    // Cache lifetime (applies to every lazy-return operator's cut in
-    // this package): the result is a lazy DataFrame, so the operator
-    // CANNOT unpersist before the caller consumes it — the entry is
-    // released by ContextCleaner when the frame is GC'd, or by LRU
-    // under storage pressure (MEMORY_AND_DISK never recomputes, it
-    // spills). Operators that materialize internally (Components,
-    // Sampling.ipfWeights) unpersist eagerly instead.
     // r16 (guide §2.4 — share one exchange): hash-partitioning by u
     // BEFORE the distinct satisfies the distinct's (u, item) clustering
     // requirement (u is a subset of the keys, so equal pairs co-locate)
@@ -130,7 +119,7 @@ object Association {
     // exchange plus one per join side above the cache).
     val b0 = df.select(col(userCol).as("u"), col(itemCol).as("item"))
       .repartition(col("u"))
-      .dropDuplicates("u", "item").cache()
+      .dropDuplicates("u", "item").transform(Cut.rows)
     // when the cap is active, the cut must sit ABOVE the capping
     // window too: b feeds three consumers (singles + both self-join
     // sides), and uncut each would replay the per-user row_number
@@ -142,10 +131,10 @@ object Association {
           org.apache.spark.sql.expressions.Window.partitionBy("u")
             .orderBy(md5(concat_ws("#", col("u").cast("string"),
               col("item").cast("string"))), col("item"))))
-        .filter(col("__r") <= maxBasket).drop("__r").cache()
+        .filter(col("__r") <= maxBasket).drop("__r").transform(Cut.rows)
     // item-cardinality-bounded, consumed by BOTH direction joins
     val singles = b.groupBy("item").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     // per-user self-join for the co-counts. The in-row alternative
     // (collect per-user baskets, explode i<j index pairs) was A/B'd
     // at sf0.1 and is ~70% SLOWER (15.8 s vs 9.5 s isolated): the

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * propagation needs diameter rounds, and near-dup chains (each crawl a
   * near-copy of the previous) make diameter unbounded at 100 TB. No
   * driver-side graph state: the driver sees only a per-round convergence
-  * checksum; lineage is cut with localCheckpoint each round so the plan
+  * checksum; lineage is cut each round ([[Cut.summary]]) so the plan
   * does not grow with iterations (use reliable checkpointing on a
   * cluster with dynamic executors).
   */
@@ -59,7 +59,7 @@ object Components {
     var e = edges
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().localCheckpoint()
+      .distinct().transform(Cut.summary)
     var converged = false
     var it = 0
     // Convergence = the (count, order-free XOR hash) checksum is a
@@ -73,10 +73,11 @@ object Components {
     }
     var cs = checksum(e)
     while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
+      val next = smallStar(largeStar(e)).transform(Cut.summary)
       val csNext = checksum(next)
       converged = csNext == cs
       cs = csNext
+      Cut.release(e)
       e = next
       it += 1
     }
@@ -104,7 +105,7 @@ object Components {
     * Scale shape: the symmetrized edge list is computed once and
     * cached; each round is two semi-joins (edge endpoints against the
     * survivor set) + one degree aggregation — 2–3 shuffles — with the
-    * survivor table localCheckpoint'd per round (flat lineage) and one
+    * survivor table cut per round (flat lineage) and one
     * driver long (its count). Peeling is monotone, so an unchanged
     * COUNT is an unchanged SET: the fixed-point test needs no set
     * comparison. The fixed point is unique regardless of peel order,
@@ -135,13 +136,12 @@ object Components {
     // sets are disjoint, so deg_{t+1}(u) = deg_t(u) − |Γ(u) ∩ R_t|
     // telescopes to the degree within the alive subgraph.
     val e = base.union(base.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint()
-    // `state` is the checkpointed (node, deg) table the current
-    // alive/removed filters read; each round's successor is materialized
-    // BEFORE the predecessor is freed (localCheckpoint is eager, and a
-    // checkpointed frame cannot be recomputed after unpersist).
+      .distinct().transform(Cut.summary)
+    // `state` is the cut (node, deg) table the current alive/removed
+    // filters read; each round's successor is cut BEFORE the predecessor
+    // is released (a released checkpoint cannot be recomputed).
     var state = e.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("node"), col("deg")).localCheckpoint()
+      .select(col("u").as("node"), col("deg")).transform(Cut.summary)
     var alive = state.filter(col("deg") >= k)
     var removed = state.filter(col("deg") < k)
     var removedCount = removed.count()
@@ -154,17 +154,16 @@ object Components {
       val updated = alive.join(delta, Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("__d"), lit(0L))).as("deg"))
-        .localCheckpoint()
-      state.unpersist()
+        .transform(Cut.summary)
+      Cut.release(state)
       state = updated
       alive = state.filter(col("deg") >= k)
       removed = state.filter(col("deg") < k)
       removedCount = removed.count()
       it += 1
     }
-    // the returned frame reads the final `state` checkpoint only; the
-    // mirrored edge cache is freed eagerly (the bfsDistances discipline)
-    e.unpersist()
+    // the returned frame reads the final `state` cut only
+    Cut.release(e)
     alive.select(col("node"), col("deg").cast("long").as("core_deg"))
   }
 
@@ -187,8 +186,7 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .distinct().cache())
+      .distinct().transform(Cut.rows))
 
   /** Core of [[triangleCounts]] over an ALREADY canonical (u < v,
     * distinct, cached) edge table — r16: factored out so [[transitivity]]
@@ -242,7 +240,7 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct().cache() // feeds degrees, wedges, the linked join
+      .distinct().transform(Cut.rows) // feeds degrees, wedges, the linked join
     val deg = canon.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDegree)
@@ -301,13 +299,13 @@ object Components {
     val lab = labels
       .select(col(nodeCol).cast("long").as("n"),
         col(xCol).cast("long").as("x"))
-      .distinct().cache() // two endpoint joins — the modularity note
+      .distinct().transform(Cut.rows)
     val mirror = canon.select(col("u"), col("v"))
       .union(canon.select(col("v").as("u"), col("u").as("v")))
     val tagged = mirror
       .join(lab.select(col("n").as("u"), col("x").as("xa")), Seq("u"))
       .join(lab.select(col("n").as("v"), col("x").as("xb")), Seq("v"))
-      .localCheckpoint(false) // feeds W, the cross sum, the diff sum
+      .transform(Cut.summary) // feeds W, the cross sum, the diff sum
     // node-side moments over INCIDENT labeled nodes only
     val nodes = tagged.select(col("u").as("n"), col("xa").as("x"))
       .distinct()
@@ -363,10 +361,7 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      // feeds the degree agg and both mirror halves in ONE action —
-      // cache lifetime: lazy-return op, the triangleCounts LRU note
-      // applies
-      .distinct().cache()
+      .distinct().transform(Cut.rows)
     val deg = canon.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val dir = canon.select(col("u"), col("v"))
@@ -405,9 +400,7 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      // feeds the degree agg and both mirror halves in ONE action —
-      // lazy-return op, the triangleCounts LRU note applies
-      .distinct().cache()
+      .distinct().transform(Cut.rows)
     val deg = canon.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val dir = canon.select(col("u"), col("v"))
@@ -443,7 +436,7 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct().cache() // lazy-return op — the triangleCounts LRU note
+      .distinct().transform(Cut.rows)
     val deg = canon.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val kDf = edges.sparkSession.createDataFrame(ks.map(Tuple1(_)))
@@ -491,9 +484,9 @@ object Components {
     * Scale shape: the edge list and degree table are computed once and
     * cached; each iteration is one edges⋈pr shuffle join on the source
     * node plus one shuffle aggregation on the destination — 2 shuffles
-    * per round, like a components round. pr is localCheckpoint'd per
-    * iteration so lineage stays flat (reliable checkpointing on a real
-    * cluster). Driver state: node count only. */
+    * per round, like a components round. pr is cut per iteration so
+    * lineage stays flat (reliable checkpointing on a real cluster).
+    * Driver state: node count only. */
   /** Synchronous label propagation — community detection on the
     * undirected graph: every node starts as its own label, and each
     * round adopts the most frequent label among its neighbors, ties
@@ -506,7 +499,7 @@ object Components {
     * Scale shape: per round, ONE edge⨝label join + a (node, label)
     * count aggregation + a per-node argmax window — the window runs
     * over the collapsed candidate table (≤ degree distinct labels per
-    * node), never raw edges. Labels localCheckpoint'd per round (flat
+    * node), never raw edges. Labels cut per round (flat
     * lineage, the [[pageRankExact]] discipline); driver state is zero.
     * Fixed `iters` rather than convergence detection: synchronous LPA
     * can oscillate on bipartite structures, so production runs pick a
@@ -519,9 +512,9 @@ object Components {
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
     val e = base.union(base.select(col("v").as("u"), col("u").as("v")))
-      .distinct().cache()
+      .distinct().transform(Cut.rows)
     var lab = e.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
+      .withColumn("label", col("node")).transform(Cut.summary)
     for (_ <- 1 to iters) {
       val counts = e.join(lab, e("v") === lab("node"))
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
@@ -531,10 +524,11 @@ object Components {
             .orderBy(col("c").desc, col("label"))))
         .filter(col("__rn") === 1)
         .select(col("u").as("node"), col("label"))
-        .localCheckpoint()
-      lab.unpersist()
+        .transform(Cut.summary)
+      Cut.release(lab)
       lab = next
     }
+    Cut.release(e)
     lab
   }
 
@@ -560,9 +554,9 @@ object Components {
       .filter(col("u") =!= col("v") && col("u").isNotNull &&
         col("v").isNotNull)
     val e = base.union(base.select(col("v").as("u"), col("u").as("v")))
-      .distinct().cache()
+      .distinct().transform(Cut.rows)
     var settled = seeds.select(col(seedCol).cast("long").as("node"))
-      .distinct().withColumn("hops", lit(0L)).localCheckpoint()
+      .distinct().withColumn("hops", lit(0L)).transform(Cut.summary)
     var frontier = settled
     var hop = 0
     while (hop < maxHops && !frontier.isEmpty) {
@@ -571,13 +565,13 @@ object Components {
         .select(col("v").as("node")).distinct()
         .join(settled.select("node"), Seq("node"), "left_anti")
         .withColumn("hops", lit(hop.toLong))
-        .localCheckpoint()
-      val grown = settled.unionByName(next).localCheckpoint()
-      settled.unpersist(); frontier = next; settled = grown
+        .transform(Cut.summary)
+      val grown = settled.unionByName(next).transform(Cut.summary)
+      if (frontier ne settled) Cut.release(frontier)
+      Cut.release(settled); frontier = next; settled = grown
     }
-    e.unpersist() // settled is localCheckpoint-ed; the mirrored edge
-    // cache would otherwise leak executor storage per call in a
-    // long-lived session
+    if (frontier ne settled) Cut.release(frontier)
+    Cut.release(e)
     settled
   }
 
@@ -619,7 +613,7 @@ object Components {
     val e = edges
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().cache()
+      .distinct().transform(Cut.rows)
     def normalized(scores: DataFrame, c: String): DataFrame =
       scores.crossJoin(broadcast(scores.agg(max(col(c)).as("__m"))))
         .select(col("node"),
@@ -639,24 +633,23 @@ object Components {
     var hub: DataFrame = null  // sparse (node, h): nodes with ≥1 out-edge
     var auth: DataFrame = null // sparse (node, a): nodes with ≥1 in-edge
     // previous iteration's hub cut, freeable once the NEXT aRaw cut has
-    // folded its data in (the final iteration's cuts feed the
-    // lazy-return result and stay — Association.itemItemCosine LRU note)
+    // folded its data in (the final iteration's cuts feed the result)
     var freeH: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val aRaw = (if (i == 1) e.groupBy(col("v")).agg(sum(lit(scale)).as("a"))
                   else e.join(hub, e("u") === hub("node"))
                     .groupBy(col("v")).agg(sum("h").as("a")))
         .withColumnRenamed("v", "node")
-        .localCheckpoint()
-      freeH.foreach(_.unpersist()); freeH = None
+        .transform(Cut.summary)
+      freeH.foreach(Cut.release); freeH = None
       auth = normalized(aRaw, "a")
       val hRaw = e.join(auth, e("v") === auth("node"))
         .groupBy(col("u")).agg(sum("a").as("h"))
         .withColumnRenamed("u", "node")
-        .localCheckpoint()
+        .transform(Cut.summary)
       // aRaw_i is consumed only by hRaw_i (just materialized) except
       // on the last round, where it feeds the returned join
-      if (i < iters) { aRaw.unpersist(); freeH = Some(hRaw) }
+      if (i < iters) { Cut.release(aRaw); freeH = Some(hRaw) }
       hub = normalized(hRaw, "h")
     }
     val nodes = e.select(col("u").as("node"))
@@ -678,8 +671,8 @@ object Components {
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
     val e = base.union(base.select(col("v").as("u"), col("u").as("v")))
-      .distinct().cache()
-    val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg")).cache()
+      .distinct().transform(Cut.rows)
+    val deg = Cut.rows(e.groupBy("u").agg(count(lit(1)).as("outdeg")))
     val n = deg.count() // node count; bounded driver state (one long)
     require(n > 0, "pageRankExact: empty graph")
     // Personalized variant: teleport mass (and the initial distribution)
@@ -704,15 +697,15 @@ object Components {
           when(col("__seed"), scale / nSeeds).otherwise(0L).as("init"),
           when(col("__seed"), teleport).otherwise(0L).as("tp"))
     }
-    val nodeState = nodes.cache()
+    val nodeState = Cut.rows(nodes)
     // r16 (guide §1.2): e ⋈ deg is LOOP-INVARIANT — the degree-annotated
     // edge list is computed and cached once, so each iteration pays only
     // the pr join + contribution aggregation instead of re-running the
     // edge-degree join (one join + its exchanges per round removed).
     val eDeg = e.join(deg, "u")
-      .select(col("u"), col("v"), col("outdeg")).cache()
+      .select(col("u"), col("v"), col("outdeg")).transform(Cut.rows)
     var pr = nodeState.select(col("node"), col("init").as("pr"))
-      .localCheckpoint()
+      .transform(Cut.summary)
     for (_ <- 1 to iters) {
       val contrib = eDeg
         .join(pr, eDeg("u") === pr("node"))
@@ -724,14 +717,12 @@ object Components {
           (col("tp") +
             call_function("div", lit(dampPct) * coalesce(col("s"), lit(0L)),
               lit(100L))).as("pr"))
-        .localCheckpoint()
-      pr.unpersist()
+        .transform(Cut.summary)
+      Cut.release(pr)
       pr = next
     }
-    // pr is localCheckpoint-cut each round, so none of the standing
-    // caches are in the returned lineage — eager unpersist (the
-    // bfsDistances discipline; r12 cache audit)
-    e.unpersist(); deg.unpersist(); nodeState.unpersist(); eDeg.unpersist()
+    // pr is cut each round, so none of the caches is in its lineage
+    Cut.release(e); Cut.release(deg); Cut.release(nodeState); Cut.release(eDeg)
     pr
   }
 
@@ -750,7 +741,7 @@ object Components {
         col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull &&
         col("v").isNotNull)
-      .distinct().cache() // lazy-return op — the triangleCounts LRU note
+      .distinct().transform(Cut.rows)
     val rec = d.join(d.select(col("v").as("u"), col("u").as("v")),
         Seq("u", "v"), "left_semi")
       .agg(count(lit(1)).as("m_reciprocal"))
@@ -777,7 +768,7 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct().cache() // lazy-return op — the triangleCounts LRU note
+      .distinct().transform(Cut.rows)
     // r16: canon is already canonical+cached — triangleCountsOf avoids
     // the second distinct pass + duplicate cache the public entry paid
     val t3 = triangleCountsOf(canon)
@@ -823,13 +814,13 @@ object Components {
     val lab = labels
       .select(col(nodeCol).cast("long").as("n"),
         col(attrCol).cast("long").as("c"))
-      .distinct().cache() // lazy-return op — the triangleCounts LRU note
+      .distinct().transform(Cut.rows)
     val mirror = canon.select(col("u"), col("v"))
       .union(canon.select(col("v").as("u"), col("u").as("v")))
     val tagged = mirror
       .join(lab.select(col("n").as("u"), col("c").as("ca")), Seq("u"))
       .join(lab.select(col("n").as("v"), col("c").as("cb")), Seq("v"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val eii = tagged.filter(col("ca") === col("cb"))
       .agg(count(lit(1)).cast(dec38).as("__eii"))
     val marg = tagged.groupBy("ca").agg(count(lit(1)).as("__a"))
@@ -869,13 +860,11 @@ object Components {
       .select(least(col(aCol), col(bCol)).cast("long").as("u"),
         greatest(col(aCol), col(bCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct().cache() // lazy-return op — the triangleCounts LRU note
+      .distinct().transform(Cut.rows)
     val lab = labels
       .select(col(nodeCol).cast("long").as("n"),
         col(commCol).cast("long").as("c"))
-      // both endpoint joins read this — without the cut Catalyst
-      // replays the caller's whole label subtree per join (no CSE)
-      .distinct().cache() // lazy-return op — the triangleCounts LRU note
+      .distinct().transform(Cut.rows)
     val tagged = canon
       .join(lab.select(col("n").as("u"), col("c").as("ca")), Seq("u"))
       .join(lab.select(col("n").as("v"), col("c").as("cb")), Seq("v"))

@@ -83,8 +83,7 @@ object CorpusPrep {
       count(when(col("__ql"), 1)).as("after_lang")).collect()(0)
     val (input, afterQuality, afterLang) =
       (g.getLong(0), g.getLong(1), g.getLong(2))
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    val afterLangDf = flagged.filter(col("__ql")).drop("__q", "__ql").cache()
+    val afterLangDf = Cut.rows(flagged.filter(col("__ql")).drop("__q", "__ql"))
 
     // afterLang IS dedupCorpus's input count — pass it down so the
     // report costs no extra corpus scan

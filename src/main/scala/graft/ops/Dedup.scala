@@ -64,22 +64,16 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.8,
       numHashTables: Int = 16, bandR: Int = 2): DataFrame = {
-    // cache(), measured against the localCheckpoint(false) alternative
-    // (VERDICT r6 #8 proposed the Importance.weights pattern here): at
-    // sf0.1 the checkpoint variant ran q78 at ~3.8 s vs ~2.4 s and q79 at
-    // ~5.3 s vs ~4.1 s (A/B, equal canary) — the three consumers (banded
-    // explode + both Jaccard confirm joins) read the columnar
-    // InMemoryRelation much faster than row-serialized checkpoint
-    // blocks, and at 100 TB the same ratio applies per partition. The
-    // cache is session-lifetime (LRU reclaims under pressure); eviction
-    // costs a recompute of one grouped agg, never a correctness race —
-    // each consumer falls back to the full lineage.
+    // Cut.rows, measured against a checkpoint: at sf0.1 the checkpoint
+    // variant ran q78 at ~3.8 s vs ~2.4 s and q79 at ~5.3 s vs ~4.1 s
+    // (A/B, equal canary) — the three consumers (banded explode + both
+    // Jaccard confirm joins) read the columnar cache much faster.
     // r16: the signing pass is now map-only (no shuffle of its own), so a
     // 1-split local scan would leave the whole sign+band+confirm chain on
     // one core — widen() restores slot-wide parallelism there and no-ops
     // on an already-wide corpus scan (guide §2.5).
     val sigs = minHashSignatures(Par.widen(docs, col(idCol)), idCol, textCol,
-      shingleN, numHashTables).cache()
+      shingleN, numHashTables).transform(Cut.rows)
     confirmJaccard(bandedCandidatePairs(sigs, bandR), sigs, sigs, threshold)
   }
 
@@ -180,8 +174,7 @@ object Dedup {
         org.apache.spark.sql.expressions.Window
           .partitionBy("__h").orderBy(col(idCol))))
       .filter(col("__rk") === 1).drop("__h", "__rk")
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache() // reused by the LSH pass, the anti-join, and both counts
+      .transform(Cut.rows) // the LSH pass, the anti-join, and both counts
     val afterExact = exact.count()
     val input = knownInput.getOrElse(docs.count())
     val nearInput =
@@ -350,8 +343,7 @@ object Dedup {
                                 numHashTables: Int = 16,
                                 bandR: Int = 2): (DataFrame, DataFrame) = {
     val batchSigs = minHashSignatures(newDocs, idCol, textCol, shingleN,
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      numHashTables).cache()
+      numHashTables).transform(Cut.rows)
     // Standing corpus dominates regardless of id (the replay-safe
     // convention): a batch doc near any corpus doc drops.
     val vsCorpus = confirmJaccard(
@@ -408,8 +400,7 @@ object Dedup {
                           maxDist: Int = 3,
                           tokenHash: Column => Column = xxhash64(_),
                           bits: Int = 64): DataFrame =
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    hammingPairs(simHashWith(docs, idCol, textCol, tokenHash).cache(),
+    hammingPairs(Cut.rows(simHashWith(docs, idCol, textCol, tokenHash)),
       maxDist, bits)
 
   /** Banded-Hamming near-dup pairs over ANY precomputed 64-bit-or-less
@@ -688,8 +679,7 @@ object Dedup {
     // uncut, the shingle explode re-plans per consumer (audited: 5
     // static documents scans). cache(): the minHashNearDupPairs-
     // measured multi-consumer choice.
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    }).cache()
+    }).transform(Cut.rows)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
     val co = sh.select(col("id").as("a"), col("gram"))
       .join(sh.select(col("id").as("b"), col("gram")), Seq("gram"))

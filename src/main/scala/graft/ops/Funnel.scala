@@ -203,8 +203,7 @@ object Funnel {
     // re-plan the events scan — 2 scans total, both through map-side
     // combine.
     val firsts = tagged.groupBy("__u").agg(min("__w").as("cohort_week"))
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache()
+      .transform(Cut.rows)
     val sizes = firsts.groupBy("cohort_week")
       .agg(count(lit(1)).as("users"))
     val g = tagged.join(firsts, "__u")

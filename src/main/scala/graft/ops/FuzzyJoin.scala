@@ -187,8 +187,7 @@ object FuzzyJoin {
       .filter(col("k") >= minOverlap)
       .withColumn("prefix",
         slice(col("toks"), lit(1), (col("k") - minOverlap + 1).cast("int")))
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache()
+      .transform(Cut.rows)
     val pref = ranked.select(col("id"), col("toks"),
       explode(col("prefix")).as("pt"))
     val cand = pref.alias("x").join(pref.alias("y"),

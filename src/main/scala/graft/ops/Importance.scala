@@ -36,21 +36,13 @@ object Importance {
                       tgtTerms: DataFrame): DataFrame = {
     val sv = srcTerms.groupBy("w").agg(count(lit(1)).as("cs"))
     val tv = tgtTerms.groupBy("w").agg(count(lit(1)).as("ct"))
-    // vocabulary-sized and consumed twice (weights + totals): checkpoint
-    // it, because Catalyst does not dedupe common subplans — without
-    // this the two corpus-sized term aggregations and the full-outer
-    // join run twice (read in the q107 plan audit). localCheckpoint
-    // instead of cache(): blocks are released by the ContextCleaner as
-    // soon as the returned plan is unreferenced, so repeated weight
-    // builds in a long-lived session leave no standing cache entries
-    // (ADVICE r4 — .cache() here leaked until an explicit unpersist
-    // nobody owned). Trade-off: checkpoint blocks are not recomputable
-    // on executor loss — at the vocabulary-table size that is a rerun,
-    // not a data-loss risk.
+    // vocabulary-sized and consumed twice (weights + totals): uncut,
+    // the two corpus-sized term aggregations and the full-outer join
+    // run twice (read in the q107 plan audit)
     val voc = sv.join(tv, Seq("w"), "full_outer")
       .select(col("w"), coalesce(col("cs"), lit(0L)).as("cs"),
         coalesce(col("ct"), lit(0L)).as("ct"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val tot = voc.agg(sum("cs").as("ts"), sum("ct").as("tt"),
       count(lit(1)).as("v"))
     // Exact.lnq, not raw log: the weight doubles are hash-compared, and

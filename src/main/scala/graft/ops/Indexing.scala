@@ -59,8 +59,7 @@ object Indexing {
           sort_array(collect_list(col("doc"))).as("postings"))
       if (minDf == 1L) idx else idx.filter(col("df") >= minDf)
     } else {
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      val p = pairs.cache()
+      val p = Cut.rows(pairs)
       val kept = p.groupBy("term").agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(nDocs))
         .filter(col("df") >= minDf &&
@@ -99,8 +98,7 @@ object Indexing {
     val toks = docs.select(col(idCol).as("doc"),
       explode(split(lower(col(textCol)), " ")).as("term"))
       .filter(col("term") =!= "")
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    val dl = toks.groupBy("doc").agg(count(lit(1)).as("dl")).cache()
+    val dl = toks.groupBy("doc").agg(count(lit(1)).as("dl")).transform(Cut.rows)
     // exact integer corpus totals; ONE division to a double at use site
     val stats = dl.agg(sum("dl").as("tot"), count(lit(1)).as("nd"))
     val tf = toks.filter(col("term").isin(queryTerms: _*))

@@ -52,12 +52,9 @@ object Lm {
     // c2 is vocabulary-sized and feeds both the score join and c1 —
     // materialize it once, and DERIVE c1 by re-aggregating c2
     // (Σ_w c₂(p,w) = c₁(p)) so the corpus-sized bigram explode is
-    // scanned once, not twice (Catalyst does not dedupe common
-    // subplans). localCheckpoint instead of cache(): the blocks are
-    // auto-released when the plan is GC'd, so repeated LM builds leave
-    // no standing cache entries (ADVICE r4).
+    // scanned once, not twice.
     val c2 = tb.groupBy("p", "w").agg(count(lit(1)).as("n2"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val c1 = c2.groupBy("p").agg(sum("n2").as("n1"))
     val v = target.select(explode(toks(col(textCol))).as("u"))
       .agg(countDistinct("u").as("nv"))

@@ -25,17 +25,14 @@ object Merge {
   def upsert(target: DataFrame, updates: DataFrame, keyCol: String,
              versionCol: String): DataFrame = {
     val w = Window.partitionBy(keyCol).orderBy(col(versionCol).desc)
-    // latest feeds TWO consumers (the anti-join's key set + the union),
-    // and Catalyst does not dedupe common subplans — without a cut the
-    // updates upstream (scan + ranking shuffle) runs twice. The batch is
-    // the SMALL side of an upsert, so materializing it once is cheap;
-    // the 100 TB target stays a single un-shuffled scan (AQE broadcasts
-    // the key set into the anti-join). localCheckpoint(false): lazy, and
-    // blocks release when the plan is GC'd.
+    // latest feeds the anti-join's key set and the union. The batch is
+    // the SMALL side of an upsert, so its summary cut costs one job over
+    // the batch; the 100 TB target stays a single un-shuffled scan (AQE
+    // broadcasts the key set into the anti-join).
     val latest = updates
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1).drop("__rk")
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     target.join(latest.select(keyCol), Seq(keyCol), "left_anti")
       .unionByName(latest)
   }

@@ -210,8 +210,7 @@ object Multimodal {
     * a < b. */
   def imageNearDupPairs(media: Dataset[MediaRow],
                         maxDist: Int = 3): DataFrame =
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    Dedup.hammingPairs(imageDHashes(media).cache(), maxDist)
+    Dedup.hammingPairs(imageDHashes(media).transform(Cut.rows), maxDist)
 
   /** Incremental image near-dedup against a STANDING dHash table (from
     * [[imageDHashes]], persisted once and appended per batch — the same
@@ -227,8 +226,7 @@ object Multimodal {
                               maxDist: Int = 3): (Dataset[MediaRow], DataFrame) = {
     val spark = newMedia.sparkSession
     import spark.implicits._
-    // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-    val batchHashes = imageDHashes(newMedia).cache()
+    val batchHashes = imageDHashes(newMedia).transform(Cut.rows)
     val vsCorpus = Dedup.hammingPairsAcross(corpusHashes, batchHashes, maxDist)
       .select(col("b").as("victim"))
     val within = Dedup.hammingPairs(batchHashes, maxDist)

@@ -28,7 +28,7 @@ object Packing {
     val spark = docs.sparkSession
     val nParts =
       if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    // localCheckpoint freezes the pids: the running-sum branch and the
+    // The summary cut freezes the pids: the running-sum branch and the
     // per-pid totals branch below must see the SAME range boundaries —
     // without materialization each branch re-plans its own exchange and
     // a pruning asymmetry desynchronizes them (the Ranks.globalRowNumber
@@ -40,7 +40,7 @@ object Packing {
     // note for the full argument and the reliable-checkpoint option).
     val parted = docs.repartitionByRange(nParts, col(orderCol))
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(Cut.summary)
     val w = Window.partitionBy("__pid").orderBy(orderCol)
     val local = parted.withColumn("__run",
       sum(col(tokenCol).cast("long")).over(w)) // inclusive running sum

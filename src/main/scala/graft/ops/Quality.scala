@@ -375,7 +375,7 @@ object Quality {
       .withColumn("__tot", sum("__c").over(
         org.apache.spark.sql.expressions.Window.partitionBy("__i")))
       .filter(col("__tot") === nRaters)
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val byItem = complete.agg(
       countDistinct("__i").cast(dec38).as("N"),
       coalesce(sum((col("__c") * col("__c")).cast(dec38)),
@@ -428,7 +428,7 @@ object Quality {
       .withColumn("__m", sum("__c").over(
         org.apache.spark.sql.expressions.Window.partitionBy("__u")))
       .filter(col("__m") >= 2)
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     // A_d per distinct panel size, folded in-row sorted by d
     val so = withM
       .groupBy((col("__m") - 1).as("__d"))

@@ -23,7 +23,7 @@ object Ranks {
                       out: String = "r"): DataFrame = {
     require(order.nonEmpty, "globalRowNumber needs sort columns")
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // localCheckpoint is LOAD-BEARING: the row_number branch and the
+    // The cut is LOAD-BEARING: the row_number branch and the
     // per-pid count branch below both consume this frame, and without
     // materialization each branch re-plans its own copy of the range
     // exchange — column pruning can make the two copies non-identical
@@ -33,12 +33,8 @@ object Ranks {
     // liftTable emitted an 11th decile from ranks > n). Freezing the
     // partitioned frame makes the pids a fact, not a per-branch plan
     // artifact. Cost: one materialization of the projected input —
-    // the same volume the range shuffle writes anyway. Lifetime: the
-    // cached RDD lives as long as the returned DataFrame is
-    // reachable; Spark's ContextCleaner unpersists it on GC, so a
-    // long-lived session does not accumulate checkpoints (the
-    // operator cannot unpersist earlier — the result is lazy).
-    // Fault-tolerance trade-off (deliberate): localCheckpoint stores
+    // the same volume the range shuffle writes anyway.
+    // Fault-tolerance trade-off (deliberate): a local checkpoint stores
     // UNREPLICATED, non-recomputable executor blocks and runs a job
     // at construction time — on a multi-executor cluster an executor
     // loss FAILS the query (retry the job) instead of recomputing,
@@ -53,7 +49,7 @@ object Ranks {
     // executor merely re-runs the query.
     val parted = df.repartitionByRange(nParts, order: _*)
       .withColumn("__gr_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(Cut.summary)
     val local = parted.withColumn("__gr_rn",
       row_number().over(
         Window.partitionBy("__gr_pid").orderBy(order: _*)).cast("long"))

@@ -264,7 +264,7 @@ object Resample {
           sum("y").over(wMa).cast("double") / period))
       .withColumn("dop", pmod(col("day"), lit(period.toLong)))
       .withColumn("__det", col("y") - col("trend"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val idx = trended.filter(col("trend").isNotNull)
       .groupBy("dop")
       .agg((aggregate(

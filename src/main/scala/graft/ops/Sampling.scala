@@ -66,10 +66,7 @@ object Sampling {
     val cellTab = df.select(col(rowCol).cast("string").as("__r"),
         col(colCol).cast("string").as("__c"))
       .groupBy("__r", "__c").agg(count(lit(1)).as("n"))
-      .cache() // consumed twice: the bound count, then the collect
-    // try/finally: the bound `require` throws PAST the unpersist — an
-    // eager-unpersist op must not leak storage when the check fails in
-    // a long-lived session
+      .transform(Cut.rows) // consumed twice: the bound count, then the collect
     val cells = try {
       val nCells = cellTab.count()
       require(nCells <= maxCells,
@@ -83,7 +80,7 @@ object Sampling {
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
         .sortBy(t => (t._1, t._2))
-    } finally cellTab.unpersist() // both consumers done (eager-action op)
+    } finally Cut.release(cellTab) // both consumers done (eager-action op)
     val rows = cells.map(_._1).distinct.sorted
     val colsK = cells.map(_._2).distinct.sorted
     val nTotal = cells.map(_._3).sum.toDouble

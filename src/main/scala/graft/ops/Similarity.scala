@@ -107,8 +107,7 @@ object Similarity {
       return exactTopK(emb, idCol, vecCol, queryFilter, k)
     val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("arr"))
       .withColumn("nv", normalizedVec(col("arr")))
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache()
+      .transform(Cut.rows)
     val lsh = new BucketedRandomProjectionLSH()
       .setInputCol("nv").setOutputCol("buckets")
       .setBucketLength(bucketLength).setNumHashTables(numHashTables)
@@ -171,8 +170,7 @@ object Similarity {
     val bl = if (bucketLength > 0) bucketLength else math.max(maxDist / 2, 1e-3)
     val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("arr"))
       .withColumn("nv", normalizedVec(col("arr")))
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache()
+      .transform(Cut.rows)
     val lsh = new BucketedRandomProjectionLSH()
       .setInputCol("nv").setOutputCol("buckets")
       .setBucketLength(bl).setNumHashTables(numHashTables)
@@ -379,10 +377,9 @@ object Similarity {
     graft.functions.Registry.registerAll(emb.sparkSession)
     require(bucketSplits >= 0,
       s"bucketSplits must be >= 1, or 0 for auto, got $bucketSplits")
-    // cache: feeds the bucket join (twice), the auto-salt profile, and
-    // both fetch-backs; the cut also keeps the corpus scan count flat —
-    // lazy-return op, Association.itemItemCosine's LRU note applies
-    val sigs = srpSignatures(emb, idCol, vecCol, planes, bandBits).cache()
+    // feeds the bucket join (twice), the auto-salt profile, and both
+    // fetch-backs; the cut also keeps the corpus scan count flat
+    val sigs = Cut.rows(srpSignatures(emb, idCol, vecCol, planes, bandBits))
     val b = sigs.select(col("id"),
       posexplode(col("bands")).as(Seq("band", "key")))
     val (splits, hot) =
@@ -423,10 +420,9 @@ object Similarity {
     graft.functions.Registry.registerAll(batch.sparkSession)
     require(bucketSplits >= 0,
       s"bucketSplits must be >= 1, or 0 for auto, got $bucketSplits")
-    // cache: feeds the across-join, both within-join sides, and the
-    // kept-signature anti-join — lazy-return op,
-    // Association.itemItemCosine's LRU note applies
-    val bs = srpSignatures(batch, idCol, vecCol, planes, bandBits).cache()
+    // feeds the across-join, both within-join sides, and the
+    // kept-signature anti-join
+    val bs = Cut.rows(srpSignatures(batch, idCol, vecCol, planes, bandBits))
     def sides(df: DataFrame, s: String): DataFrame = df.select(
       col("id").as(s), col("arr").cast("array<double>").as(s"v$s"),
       posexplode(col("bands")).as(Seq("band", "key")))
@@ -1022,9 +1018,7 @@ object Similarity {
     // by the standing join's probe side AND both sides of the
     // within-batch join, each of which re-evaluated the inline
     // centroid cosine projection (plus its Filter copy) uncached.
-    // cache lifetime: lazy-return op — Association.itemItemCosine's
-    // LRU note applies.
-    val b = ivfAssign(batch, idCol, vecCol, centroids).cache()
+    val b = ivfAssign(batch, idCol, vecCol, centroids).transform(Cut.rows)
     val bSide = b.select(col("cell"), col("id").as("b"), col("arr").as("vb"))
     val vsStanding = standing
       .select(col("cell"), col("id").as("a"), col("arr").as("va"))
@@ -1051,14 +1045,12 @@ object Similarity {
     // r17 (VERDICT r16 item 6): cache the assignment. The cell column
     // is an inline nlist-centroid cosine projection; the uncached
     // self-join evaluated it FOUR times over the corpus (the join's
-    // isnotnull(cell) Filter plus the Project, on EACH side — Catalyst
-    // neither dedupes common subplans nor CSEs across operators), and
+    // isnotnull(cell) Filter plus the Project, on EACH side — no CSE
+    // across operators), and
     // every copy is a centroid-literal tree the optimizer and codegen
     // pay for separately (plans/r17/q108_semdedup_before.txt nodes
     // (2)/(3)/(5)/(6)). One cached pass, two cheap cached reads.
-    // cache lifetime: lazy-return op — Association.itemItemCosine's
-    // LRU note applies.
-    val ix = indexed.cache()
+    val ix = Cut.rows(indexed)
     val a = ix.select(col("cell"), col("id").as("a"), col("arr").as("va"))
     val b = ix.select(col("cell"), col("id").as("b"), col("arr").as("vb"))
     val pairs = a.join(b, Seq("cell"))
@@ -1283,17 +1275,12 @@ object Similarity {
     * annJoin pipeline would re-plan twice); the reciprocity join keys
     * on the (qid, id) pair — full-cardinality keys, no hot-key
     * hazard. Cosine is symmetric, so the kept pair's `sim` is the one
-    * number; rank_ab/rank_ba record each endpoint's view.
-    *
-    * Cache lifetime: lazy-return operator — the canonical note at
-    * [[graft.ops.Association.itemItemCosine]] applies (cannot
-    * unpersist before the caller consumes; ContextCleaner/LRU
-    * releases; MEMORY_AND_DISK spills, never recomputes). */
+    * number; rank_ab/rank_ba record each endpoint's view. */
   def mutualKnnPairs(emb: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, k: Int, nprobe: Int,
                      cellSplits: Int = 0): DataFrame = {
     val knn = annJoin(emb, emb, idCol, vecCol, centroids, k, nprobe,
-      cellSplits).cache()
+      cellSplits).transform(Cut.rows)
     val rev = knn.select(col("qid").as("id"), col("id").as("qid"),
       col("rank").as("rank_ba"))
     knn.join(rev, Seq("qid", "id"))

@@ -93,13 +93,10 @@ object Stats {
                                       ps: Array[Double]): DataFrame = {
     val vc = df.filter(x.isNotNull).groupBy(x.as("__v"))
       .agg(count(lit(1)).as("__c"))
-    // checkpoint before the range shuffle samples it (the
-    // groupedPrefixSums input-cut discipline); cache the cumulative
-    // table — its three consumers (the N aggregate and the knot join,
-    // plus the knot broadcast build) would each replay the bucketed
-    // window otherwise. cache lifetime: lazy-return op —
-    // Association.itemItemCosine's LRU note applies.
-    val cum = cumCountsFromCounts(vc.localCheckpoint(false)).cache()
+    // cut before the range shuffle samples it (the groupedPrefixSums
+    // input cut); the cumulative table feeds three consumers (the N
+    // aggregate, the knot join and its broadcast build)
+    val cum = cumCountsFromCounts(Cut.summary(vc)).transform(Cut.rows)
     val knots = cum.agg(sum("__c").as("__n"))
       .select(posexplode(typedLit(ps)).as(Seq("__k", "__p")), col("__n"))
       .select(col("__k"),
@@ -398,7 +395,7 @@ object Stats {
         y.cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
       .groupBy("__x", "__y").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val a = cells.select(col("__x").as("xi"), col("__y").as("yi"),
       col("c").as("ci"))
     val b = cells.select(col("__x").as("xk"), col("__y").as("yk"),
@@ -675,7 +672,7 @@ object Stats {
     val cells = keys
       .select(abs(col("__d")).as("__a"), (col("__d") > 0).as("__p"))
       .groupBy(col("__a"), col("__p")).agg(count(lit(1)).as("__cp"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val ranks = doubledRanksFromCounts(
       cells.groupBy(col("__a").as("__v")).agg(sum("__cp").as("__c")))
     val ties = ranks.agg(coalesce(sum(
@@ -995,7 +992,7 @@ object Stats {
     * every key contributes a distinct value (a single global ordered
     * window there would funnel key-cardinality rows through one
     * partition). The bucket ids come from `spark_partition_id()` over
-    * a `localCheckpoint`ed frame, so both consumers (offsets + join)
+    * a [[Cut.summary]] frame, so both consumers (offsets + join)
     * read the SAME materialized assignment; the __dr values themselves
     * are bucket-invariant integers, so results are bit-identical to
     * the single-window form on any partitioning. */
@@ -1026,11 +1023,11 @@ object Stats {
     // input cut: repartitionByRange SAMPLES its child to pick range
     // boundaries and then shuffles it — an un-materialized upstream
     // (the JT grid + tie window) would be evaluated twice
-    val df = df0.localCheckpoint(false)
+    val df = Cut.summary(df0)
     val bucketed = df
       .repartitionByRange(parts, col(ordCol))
       .withColumn("__pb", spark_partition_id())
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val wOff = Window.partitionBy(col(groupCol)).orderBy(col("__pb"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // per-(group, bucket) totals: ≤ groups·parts rows — the offset
@@ -1067,7 +1064,7 @@ object Stats {
     val bucketed = byV
       .repartitionByRange(parts, col("__v"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val wOff = Window.orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // per-bucket totals: ≤ `parts` rows — the global window is bounded
@@ -1100,7 +1097,7 @@ object Stats {
     // Three column-pruned scans ON PURPOSE (q203 whitelisted in the
     // scan lint): a one-scan rewrite through the (x, y) cell table was
     // A/B-measured 1.4–1.7× SLOWER at sf0.1 under BOTH cut flavors
-    // (cache and localCheckpoint), because one near-continuous axis
+    // (cache and checkpoint), because one near-continuous axis
     // (price cents) makes |X|·|Y| approach row scale — the cell
     // groupBy is a full shuffle with no combine gain, while a bare
     // 2-column parquet re-scan is nearly free. The scan-dedup
@@ -1150,7 +1147,7 @@ object Stats {
     // distinct values — the rank window's existing contract.
     val cells = df.select(col(groupCol).as("__g"), x.as("__x"))
       .groupBy(col("__g"), col("__x")).agg(count(lit(1)).as("__cg"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val ranks = doubledRanksFromCounts(cells.groupBy(col("__x").as("__v"))
         .agg(sum("__cg").as("__c")))
       .select(col("__v").as("__x"), col("__c"), col("__dr"))
@@ -1217,14 +1214,14 @@ object Stats {
     val cell = df.groupBy(col(blockCol).as("__b"), col(treatCol).as("__t"))
       .agg(sum(x.cast("long")).as("__s"), count(lit(1)).as("__c"))
       .withColumn("__m", col("__s").cast("double") / col("__c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val kRow = cell.agg(countDistinct(col("__t")).as("__k"))
     val wb = Window.partitionBy(col("__b"))
     val kept = cell
       .withColumn("__kb", count(lit(1)).over(wb))
       .crossJoin(broadcast(kRow))
       .filter(col("__kb") === col("__k"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     // doubled average ranks within each block from its per-mean
     // counts (the doubledRanks discipline, block-locally)
     val byV = kept.groupBy(col("__b"), col("__m"))
@@ -1308,8 +1305,6 @@ object Stats {
     // single-task join. cache(): the capped frame feeds 4 consumers
     // (both join sides, n, ties) and its window is not free to replay;
     // uncapped path is untouched (plan and oracle byte-identical).
-    // Lifetime: ContextCleaner unpersists with the frame (LRU note in
-    // Association.itemItemCosine applies).
     val base =
       if (maxSeries == Int.MaxValue) base0
       else base0.withColumn("__r", row_number().over(
@@ -1318,7 +1313,7 @@ object Stats {
               col("__t").cast("string"), col("__o").cast("string"),
               col("__x").cast("string"))),
             col("__t"), col("__o"), col("__x"))))
-        .filter(col("__r") <= maxSeries).drop("__r").cache()
+        .filter(col("__r") <= maxSeries).drop("__r").transform(Cut.rows)
     val a = base.select(col("__k"), col("__t").as("__ta"),
       col("__o").as("__oa"), col("__x").as("__xa"))
     val b = base.select(col("__k"), col("__t").as("__tb"),
@@ -1386,8 +1381,7 @@ object Stats {
             md5(concat_ws("#", col("__k").cast("string"),
               col("__t").cast("string"), col("__x").cast("string"))),
             col("__t"), col("__x"))))
-        // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-        .filter(col("__r") <= maxSeries).drop("__r").cache()
+        .filter(col("__r") <= maxSeries).drop("__r").transform(Cut.rows)
     val a = base.select(col("__k"), col("__t").as("__ta"),
       col("__x").as("__xa"))
     val b = base.select(col("__k"), col("__t").as("__tb"),
@@ -1488,7 +1482,7 @@ object Stats {
     val cells = df.groupBy(col(bucketCol).as("__b"))
       .agg(sum(when(label, 1L).otherwise(0L)).as("pos"),
         sum(when(label, 0L).otherwise(1L)).as("neg"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val tot = cells.agg(sum("pos").as("__p"), sum("neg").as("__n"))
     val woe = Exact.lnq(((col("pos") + lit(0.5)) * col("__n")) /
       ((col("neg") + lit(0.5)) * col("__p")))
@@ -1572,7 +1566,7 @@ object Stats {
     // statistic windows then run over value cardinality, never raw
     // rows, and n rides the SAME single exchange as the prefix counts
     // (a separate count() aggregate would re-plan the whole
-    // calibration upstream — Catalyst does not dedupe common subplans)
+    // calibration upstream)
     val byV = cal.select(abs(col(yCol) - col(yhatCol)).as("__r"))
       .groupBy("__r").agg(count(lit(1)).as("__c"))
     val ord = Window.orderBy(col("__r"))
@@ -1673,7 +1667,7 @@ object Stats {
   def theilsU(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val cells = df.select(col(xCol).as("__x"), col(yCol).as("__y"))
       .groupBy("__x", "__y").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val wx = Window.partitionBy(col("__x"))
     val wy = Window.partitionBy(col("__y"))
     val wAllRows = Window.partitionBy(lit(1))
@@ -1962,7 +1956,7 @@ object Stats {
     val dv = df.select(col(groupCol).as("__g"), x.cast("long").as("__x"))
       .filter(col("__x").isNotNull)
       .groupBy("__g", "__x").agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val wp = Window.partitionBy("__g").orderBy(col("__x"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pref = dv
@@ -2038,14 +2032,12 @@ object Stats {
     val pairs = df.select(a.cast("string").as("__a"),
       b.cast("string").as("__b"))
     // The contingency table is label²-bounded but feeds THREE consumers
-    // (both marginals + agree/N), and Catalyst does not dedupe common
-    // subplans — without a cut the full upstream scan (with whatever
-    // expensive projection produced the labels, e.g. q238's stopword
-    // language vote) runs three times (read in the q238 plan audit:
-    // 3 parquet scans, no ReusedExchange). localCheckpoint(false)
-    // materializes it once; blocks release when the plan is GC'd.
+    // (both marginals + agree/N) — without a cut the full upstream scan
+    // (with whatever expensive projection produced the labels, e.g.
+    // q238's stopword language vote) runs three times (read in the q238
+    // plan audit: 3 parquet scans, no ReusedExchange).
     val cells = pairs.groupBy("__a", "__b").agg(count(lit(1)).as("__n"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val marg = cells.groupBy("__a").agg(sum("__n").as("__na"))
       .join(cells.groupBy("__b").agg(sum("__n").as("__nb")),
         col("__a") === col("__b"), "full")
@@ -2195,15 +2187,13 @@ object Stats {
       : DataFrame = {
     // the per-key rate table feeds THREE consumers (both moment passes
     // + the final scoring projection) — uncut, the raw scan re-plans
-    // per consumer (audited: 3 static events scans). cache(): key-
-    // cardinality frames are row-scale at 100 TB, the columnar
-    // InMemoryRelation read is the measured multi-consumer choice.
+    // per consumer (audited: 3 static events scans); key-cardinality
+    // frames are row-scale at 100 TB, hence Cut.rows
     val keys = df.groupBy(col(keyCol).as("__k"))
       .agg(count(lit(1)).as("n"),
         sum(when(success, 1L).otherwise(0L)).as("x"))
       .withColumn("rate", col("x").cast("double") / col("n"))
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache()
+      .transform(Cut.rows)
     val m1 = keys.agg(
       count(lit(1)).cast("double").as("__kn"),
       aggregate(array_sort(collect_list(struct(col("__k"),
@@ -2686,8 +2676,7 @@ object Stats {
       .groupBy("__b", "__t").agg(max("__s").as("__s"))
       // blocks·k-bounded cell table consumed by the block list, the
       // dense completion, and both readouts — ONE scan of the input
-      // (Catalyst does not dedupe common subplans; the q238 lesson)
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val dense = obs.select(col("__b")).distinct()
       .crossJoin(broadcast(tDf))
       .join(obs, Seq("__b", "__t"), "left")
@@ -2743,7 +2732,7 @@ object Stats {
     val cells = df.select(col(groupCol).as("__g"), x.cast("long").as("__x"))
       .filter(col("__x").isNotNull && col("__g").isNotNull)
       .groupBy("__g", "__x").agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     // DENSE (group × value) grid: the per-group cumulative must also
     // pass values the group itself never saw (an earlier group's rows
     // at such a value still count toward A). Group cardinality is
@@ -2835,7 +2824,7 @@ object Stats {
       .groupBy(col(blockCol).as("__b"), col(treatCol).as("__t"))
       .agg(sum(x.cast("long")).as("__s"), count(lit(1)).as("__c"))
       .withColumn("__m", col("__s").cast("double") / col("__c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val wb = Window.partitionBy(col("__b"))
     val kept = cell
       .withColumn("__kb", count(lit(1)).over(wb))
@@ -2895,14 +2884,14 @@ object Stats {
       .groupBy(col(raterCol).as("__b"), col(objectCol).as("__t"))
       .agg(sum(x.cast("long")).as("__s"), count(lit(1)).as("__c"))
       .withColumn("__m", col("__s").cast("double") / col("__c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val kf = cell.agg(countDistinct(col("__t")).as("__k"))
     val wb = Window.partitionBy(col("__b"))
     val kept = cell
       .withColumn("__kb", count(lit(1)).over(wb))
       .crossJoin(broadcast(kf))
       .filter(col("__kb") === col("__k"))
-      .localCheckpoint(false) // feeds ranks, rater count, join-back
+      .transform(Cut.summary) // feeds ranks, rater count, join-back
     val byV = kept.groupBy(col("__b"), col("__m"))
       .agg(count(lit(1)).as("__cv"))
     val wOrd = Window.partitionBy(col("__b")).orderBy(col("__m"))
@@ -2912,7 +2901,7 @@ object Stats {
       .select(col("__b"), col("__m"),
         (lit(2L) * col("__below") + col("__cv") + 1).as("__dr"),
         col("__cv"))
-      .localCheckpoint(false) // feeds the tie fold and the join-back
+      .transform(Cut.summary) // feeds the tie fold and the join-back
     // per-rater tie correction off the same per-mean counts
     val ties = ranked.agg(coalesce(sum((col("__cv") * col("__cv") *
         col("__cv") - col("__cv")).cast(dec38)),
@@ -2950,7 +2939,7 @@ object Stats {
         y.cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
       .groupBy("__x", "__y").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val a = cells.select(col("__x").as("xi"), col("__y").as("yi"),
       col("c").as("ci"))
     val b = cells.select(col("__x").as("xk"), col("__y").as("yk"),
@@ -3210,7 +3199,7 @@ object Stats {
       .groupBy("__g")
       .agg(count(lit(1)).as("n"), sum(col("__x").cast(dec38)).as("s"),
         sum((col("__x") * col("__x")).cast(dec38)).as("ss"))
-      .localCheckpoint(false) // feeds the totals AND the size table
+      .transform(Cut.summary) // feeds the totals AND the size table
     val byN = cells.groupBy(col("n"))
       .agg(sum((col("s") * col("s"))).as("__s2"))
     val bs = byN.agg(

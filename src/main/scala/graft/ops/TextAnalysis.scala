@@ -315,8 +315,7 @@ object TextAnalysis {
     // 3 static documents scans incl. the bench side). cache(): doc ×
     // gram is row-scale.
     val d = hashedWordGrams(docs, Seq(idCol), textCol, n).distinct()
-      // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-      .cache()
+      .transform(Cut.rows)
     val b = hashedWordGrams(bench, Nil, textCol, n).distinct()
     val hits = d.join(b, Seq("__h"))
       .groupBy(col(idCol)).agg(count(lit(1)).as("hit"))
@@ -346,16 +345,13 @@ object TextAnalysis {
                       minPairDocs: Long = 5L): DataFrame = {
     // tk feeds THREE consumers (df counts + both sides of the pair
     // self-join) and its upstream is the corpus tokenize + distinct
-    // shuffle — cache() it (the minHashNearDupPairs-measured choice
-    // for row-scale multi-consumer frames: columnar InMemoryRelation
-    // reads beat both a triple recompute and row-serialized
-    // checkpoint blocks; LRU reclaims under pressure)
+    // shuffle
     val tk = docs.select(col(idCol).as("doc"),
         explode(split(col(textCol), " ")).as("token"))
       .filter(col("token") =!= "")
       .distinct()
       .join(vocab.select("token"), Seq("token"), "left_semi")
-      .cache()
+      .transform(Cut.rows)
     val nDocs = docs.select(col(idCol)).distinct().count()
     val dfx = tk.groupBy("token").agg(count(lit(1)).as("df"))
     val pairs = tk.select(col("doc"), col("token").as("tok_a"))
@@ -611,7 +607,7 @@ object TextAnalysis {
       .filter(col("__p") =!= "")
       .withColumn("__ws", split(col("__p"), " "))
       .filter(size(col("__ws")) <= maxPhraseLen)
-      .localCheckpoint(false) // feeds word stats AND phrase stats
+      .transform(Cut.summary) // feeds word stats AND phrase stats
     val wstats = phrases
       .select(explode(col("__ws")).as("__w"),
         size(col("__ws")).cast("long").as("__l"))
@@ -656,7 +652,7 @@ object TextAnalysis {
       .groupBy("g", "token").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= minDf)
       .select("g", "token")
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val sizes = types0.groupBy("g").agg(count(lit(1)).as("v"))
     val shared = types0.select(col("g").as("ga"), col("token"))
       .join(types0.select(col("g").as("gb"), col("token")), Seq("token"))

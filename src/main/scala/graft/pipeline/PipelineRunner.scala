@@ -47,8 +47,10 @@ object PipelineRunner {
   /** Validate a spec against the real catalog without executing any
     * load: extracts and transforms are resolved and ANALYZED (so schema
     * errors, missing columns, and bad SQL all surface), and each load's
-    * would-be physical plan is returned as text. The dry run triggers
-    * zero jobs — analysis and planning are driver-side only. */
+    * would-be physical plan is returned as text. Past reading the
+    * extracts (a parquet extract without a declared schema infers it
+    * with one job) the dry run triggers zero jobs — analysis and
+    * planning are driver-side only. */
   def dryRun(spark: SparkSession, spec: PipelineSpec): Seq[(String, String)] =
     perLoad(spark, spec)(_.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
@@ -387,8 +389,8 @@ object PipelineRunner {
             atVersion(_, ver, l, "knn load: assignment sidecar")(assign))
           // cache: feeds the union corpus, the edge queries, and the
           // assignment landing — released after both swaps
-          val freshAssigned =
-            assign(unassigned(df1, standingAssign, key), key, vec).cache()
+          val freshAssigned = graft.ops.Cut.rows(
+            assign(unassigned(df1, standingAssign, key), key, vec))
           val freshArr = freshAssigned.select("id", "arr")
           val edges = graft.ops.Similarity.annJoin(freshArr,
             standingAssign.fold(freshArr)(
@@ -397,7 +399,7 @@ object PipelineRunner {
             excludeSelf = Some(true))
           Merged(appendNew(standing, edges, "qid"),
             Some(standingAssign.fold(freshAssigned)(_.unionByName(freshAssigned))),
-            () => freshAssigned.unpersist())
+            () => graft.ops.Cut.release(freshAssigned))
         }
       case "ivf" =>
         // declarative ASSIGNMENT-TABLE landing (VERDICT r13 item 4 —

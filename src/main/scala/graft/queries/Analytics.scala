@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Components, Funnel, Indexing, Intervals, Layout, Merge,
+import graft.ops.{Components, Cut, Funnel, Indexing, Intervals, Layout, Merge,
   Resample, Rollup, Sampling, Stats, Survival}
 import Support._
 
@@ -2394,7 +2394,7 @@ object Analytics {
           pmod(days + 4, lit(7L)).as("dow"))
         .groupBy("event_type", "dow", "vx")
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .transform(Cut.summary)
       val prof = cells.groupBy("event_type", "dow")
         .agg((sum(col("vx") * col("c")).cast("double") / sum("c")).as("mu"))
       val resid = cells.join(broadcast(prof), Seq("event_type", "dow"))
@@ -2455,7 +2455,7 @@ object Analytics {
       val m = base.filter(col("split") === "cal")
         .groupBy("o_orderpriority")
         .agg((sum("y").cast("double") / count(lit(1))).as("yhat"))
-        .localCheckpoint(false)
+        .transform(Cut.summary)
       val cal = base.filter(col("split") === "cal")
         .join(broadcast(m), "o_orderpriority")
       val test = base.filter(col("split") === "test")
@@ -2609,7 +2609,7 @@ object Analytics {
       val m = base.filter(col("split") === "cal")
         .groupBy("o_orderpriority")
         .agg((sum("y").cast("double") / count(lit(1))).as("yhat"))
-        .localCheckpoint(false)
+        .transform(Cut.summary)
       val cal = base.filter(col("split") === "cal")
         .join(broadcast(m), "o_orderpriority")
       val test = base.filter(col("split") === "test")

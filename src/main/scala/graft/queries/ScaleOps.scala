@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Clustering, Dedup, Multimodal, RangeJoin, Similarity, TextAnalysis}
+import graft.ops.{Clustering, Cut, Dedup, Multimodal, RangeJoin, Similarity, TextAnalysis}
 import Support._
 
 /** Training-data-pipeline operators as contract queries (builder brief +
@@ -897,8 +897,7 @@ object ScaleOps {
       // canonical join, and through it the cap); without a cache the
       // classifier explode + anti-join recompute per subtree.
       val kept = graft.ops.UrlCuration.dropBlockedDomains(gated, "url",
-        // cache lifetime: lazy-return op — Association.itemItemCosine's LRU note applies
-        Seq("src0-0.org", "src5-1.org").toDF("domain")).cache()
+        Seq("src0-0.org", "src5-1.org").toDF("domain")).transform(Cut.rows)
       kept.createOrReplaceTempView("curation_kept")
       val edges = s.sql(
         """WITH sh AS (

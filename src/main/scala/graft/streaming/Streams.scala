@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.ops.Dedup
+import graft.ops.{Cut, Dedup}
 
 /** Structured Streaming surface (SURVEY.md §2.8 ST1–ST8).
   *
@@ -325,11 +325,11 @@ object Streams {
             org.apache.spark.sql.types.StructField("__h",
               org.apache.spark.sql.types.StringType))))
       val kept = Dedup.incrementalExactDedup(batch, idCol, textCol, prior)
-        .cache()
+        .transform(Cut.rows)
       kept.write.mode("overwrite").parquet(s"$outDir/batch_$id")
       kept.select(sha2(col(textCol), 256).as("__h")).distinct()
         .write.mode("overwrite").parquet(s"$digestDir/batch_$id")
-      kept.unpersist()
+      Cut.release(kept)
     }
 
   /** ST × L17: streaming drift monitor — every micro-batch is PSI-scored
@@ -463,7 +463,7 @@ object Streams {
       val spark = batch.sparkSession
       val priorDirs = batchDirs(spark, assignDir, except = Some(id))
       val assigned = Similarity.ivfAssign(batch, idCol, vecCol, centroids)
-        .cache() // feeds the union corpus AND the assignment landing
+        .transform(Cut.rows) // feeds the union corpus AND the assignment landing
       val standing =
         if (priorDirs.nonEmpty)
           spark.read.parquet(priorDirs: _*).select("id", "arr")
@@ -475,7 +475,7 @@ object Streams {
           excludeSelf = Some(true))
         .write.mode("overwrite").parquet(s"$outDir/batch_$id")
       assigned.write.mode("overwrite").parquet(s"$assignDir/batch_$id")
-      assigned.unpersist()
+      Cut.release(assigned)
     }
   }
 
@@ -553,11 +553,11 @@ object Streams {
         else Similarity.ivfAssign(batch.limit(0), idCol, vecCol, centroids)
       val (kept, _) = Similarity.incrementalSemDedup(batch, standing,
         idCol, vecCol, threshold, centroids)
-      val keptC = kept.cache()
+      val keptC = Cut.rows(kept)
       keptC.write.mode("overwrite").parquet(s"$outDir/batch_$id")
       Similarity.ivfAssign(keptC, idCol, vecCol, centroids)
         .write.mode("overwrite").parquet(s"$assignDir/batch_$id")
-      keptC.unpersist()
+      Cut.release(keptC)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{EtlSession, Tables}
-import graft.ops.Similarity
+import graft.ops.{Cut, Similarity}
 import graft.tools.BenchKit.time
 
 /** ANN benchmark at a volume that exercises pruning (VERDICT r6 #2):
@@ -58,7 +58,7 @@ object AnnBench {
         (id, Array.tabulate(dim)(d =>
           (h(c * 7919L + 13L, d) + 0.35 * h(c * 104729L + g, d + 53)
             + 0.05 * h(id, d + 101)).toFloat))
-      }.toDF("vec_id", "embedding").repartition(32).cache()
+      }.toDF("vec_id", "embedding").repartition(32).transform(Cut.rows)
       embS.count()
       val centsS = (0 until clusters).map { c =>
         (c, (0 until dim).map(d => h(c.toLong * 7919L + 13L, d)))
@@ -97,7 +97,7 @@ object AnnBench {
         val jit = if (hotRow) 0.25 else 0.6
         (id, Array.tabulate(dim)(d =>
           (h(c * 7919L + 13L, d) + jit * h(id, d + 101)).toFloat))
-      }.toDF("vec_id", "embedding").repartition(32).cache()
+      }.toDF("vec_id", "embedding").repartition(32).transform(Cut.rows)
       embS.count()
       val planesS = (0 until 32).map { p =>
         (p, (0 until dim).map(d => h(p.toLong + 5555L, d)))
@@ -147,7 +147,7 @@ object AnnBench {
       (id, Array.tabulate(dim)(d =>
         (h(c * 7919L + 13L, d) + 0.35 * h(c * 104729L + g, d + 53)
           + 0.05 * h(id, d + 101)).toFloat))
-    }.toDF("vec_id", "embedding").repartition(32).cache()
+    }.toDF("vec_id", "embedding").repartition(32).transform(Cut.rows)
     emb.count()
     val queryIds = emb.select("vec_id").filter(col("vec_id") < nQueries)
     def queryFilter(df: DataFrame) = df.filter(col("vec_id") < nQueries)
@@ -163,7 +163,7 @@ object AnnBench {
     val ((indexed, centroids), ivfBuildSec) = time {
       val (ix, c) = Similarity.ivfIndex(emb, "vec_id", "embedding",
         nlist = clusters, trainSample = 8192)
-      val cached = ix.cache(); cached.count()
+      val cached = Cut.rows(ix); cached.count()
       (cached, c)
     }
     val ((ivfSet, ivfQuerySec), _) = time {
@@ -174,7 +174,7 @@ object AnnBench {
     val ((encoded, codebooks), pqBuildSec) = time {
       val (_, cb) = Similarity.pqIndex(emb, "vec_id", "embedding",
         m = 8, kCent = 64, trainSample = 8192)
-      val enc = Similarity.pqAssign(emb, "vec_id", "embedding", cb).cache()
+      val enc = Cut.rows(Similarity.pqAssign(emb, "vec_id", "embedding", cb))
       enc.count()
       (enc, cb)
     }
@@ -185,7 +185,7 @@ object AnnBench {
     // fused IVF+PQ: ADC only inside probed cells, then exact rerank
     val (ivfpqEncoded, ivfpqBuildSec) = time {
       val e = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
-        centroids, codebooks).cache()
+        centroids, codebooks).transform(Cut.rows)
       e.count(); e
     }
     val (ivfpqSet, ivfpqQuerySec) = time {
@@ -201,7 +201,7 @@ object AnnBench {
     // IVF/PQ tiers.
     val (jlVec, jlBuildSec) = time {
       val p = graft.ops.Projection.randomProjectionVec(
-        emb, "vec_id", "embedding", dim, 16).cache()
+        emb, "vec_id", "embedding", dim, 16).transform(Cut.rows)
       p.count(); p
     }
     val (jlSet, jlQuerySec) = time {
@@ -236,7 +236,7 @@ object AnnBench {
     }
     val (refIndexed, refAssignSec) = time {
       val ix = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        refinedCents).cache()
+        refinedCents).transform(Cut.rows)
       ix.count(); ix
     }
     val (refSet, refQuerySec) = time {
@@ -310,7 +310,7 @@ object AnnBench {
     }
     val (enc119, fixtureEncodeSec) = time {
       val e = Similarity.ivfPqIndex(fe, "vec_id", "embedding", cents119, cb119)
-        .cache()
+        .transform(Cut.rows)
       e.count(); e
     }
     val (_, fixtureQuerySec) = time {

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.EtlSession
-import graft.ops.Dedup
+import graft.ops.{Cut, Dedup}
 import graft.tools.BenchKit.{h, time}
 
 /** Dedup benchmark at a volume that exercises the LSH banding: the
@@ -55,7 +55,7 @@ object DedupBench {
           t
         }
       (id, toks.mkString("w", " w", ""))
-    }.toDF("doc_id", "text").repartition(32).cache()
+    }.toDF("doc_id", "text").repartition(32).transform(Cut.rows)
     docs.count()
 
     val (nExactRemoved, exactSec) = time {

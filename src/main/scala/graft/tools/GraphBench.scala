@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.EtlSession
-import graft.ops.Components
+import graft.ops.{Components, Cut}
 import graft.tools.BenchKit.{h, time}
 
 /** Graph-operator benchmark at a volume the fixtures cannot reach: the
@@ -45,7 +45,7 @@ object GraphBench {
         else java.lang.Math.floorMod(h(i, 4L), nNodes)
       (u, v)
     }.toDF("a", "b").filter(col("a") =!= col("b"))
-      .repartition(32).cache()
+      .repartition(32).transform(Cut.rows)
     val edgeCount = edges.count()
 
     val (ccN, ccSec) = time {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.EtlSession
-import graft.ops.{Funnel, Merge}
+import graft.ops.{Cut, Funnel, Merge}
 import graft.tools.BenchKit.{abBench, h}
 
 /** Warehouse-maintenance family at volume — the round-10 rewrites
@@ -156,7 +156,7 @@ object MergeBench {
           (col("__w") - col("cohort_week")).as("week_offset"))
         .agg(sum("__v").as("revenue"),
           sum(when(col("__rn") === 1, 1L).otherwise(0L)).as("__nf"))
-        .localCheckpoint(false)
+        .transform(Cut.summary)
       val sizes = g.filter(col("week_offset") === 0)
         .select(col("cohort_week"), col("__nf").as("users"))
       val wCum = Window.partitionBy("cohort_week").orderBy("week_offset")

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.EtlSession
-import graft.ops.{Association, Resample, Stats}
+import graft.ops.{Association, Cut, Resample, Stats}
 import graft.tools.BenchKit.{h, time}
 
 /** Stats-tier benchmark at a volume the fixtures cannot reach: the
@@ -96,7 +96,7 @@ object StatsBench {
           (nUsers, java.lang.Math.floorMod(h(i, 3L), nItems))
         }
         val inter = organic.union(bots).toDF("user_id", "item")
-          .repartition(32).cache()
+          .repartition(32).transform(Cut.rows)
         val n = inter.count()
         val oCap = Association.itemItemCosine(inter, "user_id", "item",
           k = 10, minCo = 2L, maxBasket = 64)
@@ -106,7 +106,7 @@ object StatsBench {
           k = 10, minCo = 2L)
         val (_, bs) = time { force(oRaw) }
         val b = oRaw.count()
-        inter.unpersist()
+        Cut.release(inter)
         (n, a, as, b, bs)
       }
 
@@ -117,7 +117,7 @@ object StatsBench {
         val gk = java.lang.Math.floorMod(h(i, 4L), 3L)
         val v = java.lang.Math.floorMod(h(i, 5L), 30000L)
         (gk, v * v / 30000L) // quadratic stretch: right-skewed tail
-      }.toDF("g", "x").repartition(32).cache()
+      }.toDF("g", "x").repartition(32).transform(Cut.rows)
       g.count(); g
     }
     val (tmRows, tmSec, tmOldRows, tmOldSec) =
@@ -160,7 +160,7 @@ object StatsBench {
       val df = spark.range(mkRows).map { i =>
         val k = java.lang.Math.floorMod(h(i, 11L), keys)
         (k, i, i, java.lang.Math.floorMod(h(i, 12L), 64L))
-      }.toDF("k", "ts", "o", "x").repartition(32).cache()
+      }.toDF("k", "ts", "o", "x").repartition(32).transform(Cut.rows)
       df.count(); df
     }
     val (mkKeysOut, mkSec, mkKeys400, mkSec400) =
@@ -170,12 +170,12 @@ object StatsBench {
         val o100 = Stats.mannKendall(s100, "k", "ts", col("x"), "o")
         val (_, as) = time { force(o100) }
         val a = o100.count()
-        s100.unpersist()
+        Cut.release(s100)
         val s400 = mkSeries(math.max(mkRows / 400, 50L)) // ~400/key
         val o400 = Stats.mannKendall(s400, "k", "ts", col("x"), "o")
         val (_, cs) = time { force(o400) }
         val c = o400.count()
-        s400.unpersist()
+        Cut.release(s400)
         (a, as, c, cs)
       }
 
@@ -203,7 +203,7 @@ object StatsBench {
             java.lang.Math.floorMod(h(i, 15L), 64L))
         }
         val sHot = hotOrganic.union(hotBot).toDF("k", "ts", "o", "x")
-          .repartition(32).cache()
+          .repartition(32).transform(Cut.rows)
         sHot.count()
         // Disable broadcast for this arm: at fixture scale the 1.1M-row
         // build side fits a broadcast and AQE converts the self-join to
@@ -229,7 +229,7 @@ object StatsBench {
         val c = oRaw.count()
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        sHot.unpersist()
+        Cut.release(sHot)
         (a, as, b, bs, c, cs)
       }
 
@@ -272,13 +272,13 @@ object StatsBench {
           (us, java.lang.Math.floorMod(h(i, 8L), 10000L))
         }.toDF("us", "v")
           .select(timestamp_micros(col("us")).as("ts"), col("v"))
-          .repartition(32).cache()
+          .repartition(32).transform(Cut.rows)
         events.count()
         val o = Resample.classicalDecompose(events, "ts", col("v"),
           period = 7)
         val (_, sec) = time { force(o) }
         val r = (o.count(), sec)
-        events.unpersist()
+        Cut.release(events)
         r
       }
 
@@ -298,7 +298,7 @@ object StatsBench {
         import org.apache.spark.sql.expressions.Window
         val d = spark.range(nRows)
           .map(i => (h(i, 11L), h(i, 12L))).toDF("x", "y")
-          .repartition(32).cache()
+          .repartition(32).transform(Cut.rows)
         val n = d.count()
         def newArm(): Double =
           time { force(Stats.spearman(d, col("x"), col("y"))) }._2
@@ -315,7 +315,7 @@ object StatsBench {
         }
         val a1 = newArm(); val b1 = oldArm()
         val a2 = newArm(); val b2 = oldArm()
-        d.unpersist()
+        Cut.release(d)
         (n, math.min(a1, a2), math.min(b1, b2))
       }
 

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.EtlSession
-import graft.ops.{Indexing, TextAnalysis, Vocab}
+import graft.ops.{Cut, Indexing, TextAnalysis, Vocab}
 import graft.tools.BenchKit.{h, time}
 
 /** Text-curation tier at volume — the LLM-data-pipeline stages priced
@@ -79,7 +79,7 @@ object TextBench {
       Vocab.induceVocab(docs, "text", 10000).count()
     }
     val vocab = Vocab.induceVocab(docs, "text", 10000)
-      .localCheckpoint(false)
+      .transform(Cut.summary)
     val (oRows, oSec) = time2 {
       Vocab.oovRate(docs, "doc_id", "text", vocab).count()
     }

@@ -144,6 +144,22 @@ class FunctionsSuite extends SparkTestBase {
     }
   }
 
+  test("a second pass over 120 distinct generated classes compiles none") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // one whole-stage class per query, made distinct by its inlined
+    // literals: 120 overflow Spark's default cache (100 entries in 4
+    // segments) but fit in EtlSession.CodegenCachePin's
+    def pass(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 120).foreach(i =>
+        spark.range(3).selectExpr(s"id * $i + ${i * 7} AS x").collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = pass()
+    assert(first >= 80, s"the first pass compiled only $first classes")
+    assert(pass() == 0)
+  }
+
   test("Registry.registerAll twice: second call replaces nothing, all resolve") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val fr = spark.sessionState.functionRegistry

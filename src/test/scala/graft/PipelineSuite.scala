@@ -982,6 +982,40 @@ class PipelineSuite extends SparkTestBase {
         .filter(col("n_chars") > 0).count())
   }
 
+  test("dryRun and lineage of the stage feeds start no job past schema reads") {
+    // T-P9/T-P11/T-P12/T-P14's stage transforms and the pricing example.
+    // A parquet extract without a declared schema infers it with one
+    // Spark job per read; everything after the read must be driver-side.
+    def stageFeed(cls: String, table: String, options: String = "{}") =
+      PipelineSpec.fromJson(s"""{
+        "name": "dry",
+        "extracts": [
+          {"view": "$table", "format": "parquet", "path": "$sf0001/$table.parquet"}],
+        "transforms": [
+          {"view": "staged", "className": "graft.pipeline.stages.$cls",
+           "inputs": ["$table"], "options": $options}],
+        "loads": [{"format": "parquet", "path": "${tmp()}/dry"}]
+      }""")
+    val specs = Seq(
+      stageFeed("WinsorizeStage", "documents"),
+      stageFeed("QuantileNormalizeStage", "documents"),
+      stageFeed("BenfordGateStage", "documents"),
+      stageFeed("KAnonymityGateStage", "customer",
+        """{"quasiCols": "c_nationkey,c_mktsegment",
+           "sensitiveCol": "c_acctbal", "k": "5"}"""),
+      PipelineSpec.fromJson(java.nio.file.Files.readString(
+        java.nio.file.Path.of("examples/pricing_summary_feed.json"))))
+    for (spec <- specs) {
+      val reads = jobsStartedBy(spec.extracts.foreach(e =>
+        graft.sources.Sources.read(spark, e.format, e.path, e.schema, e.options)))
+      val stage = spec.transforms.head.className.getOrElse(spec.name)
+      assert(jobsStartedBy(PipelineRunner.dryRun(spark, spec)) == reads,
+        s"dryRun of $stage")
+      assert(jobsStartedBy(PipelineRunner.lineage(spark, spec)) == reads,
+        s"lineage of $stage")
+    }
+  }
+
   test("T-P14: KAnonymityGateStage audits classes via spec options") {
     val out = tmp()
     val spec = s"""{

@@ -561,4 +561,22 @@ class PlanLintSuite extends SparkTestBase {
         "a cached uncapped same-frame equi-join must still trip the rule")
     } finally { cached.unpersist(); () }
   }
+
+  test("source lint: every cut in src/main goes through graft.ops.Cut") {
+    // a new materialization point picks a kind (Cut.summary or Cut.rows)
+    // and a release, instead of restating the policy at its site
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    val raw = Seq("localCheckpoint", ".cache()", ".persist(", ".unpersist(")
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles.toSeq
+      .flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val hits = for {
+      f <- files(root) if f.getName.endsWith(".scala") &&
+        f.getPath != "src/main/scala/graft/ops/Cut.scala"
+      (line, i) <- scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
+        _.getLines().toList).zipWithIndex
+      call <- raw if line.contains(call)
+    } yield s"${f.getPath}:${i + 1}: $call"
+    assert(hits.isEmpty, s"raw cuts outside Cut:\n${hits.mkString("\n")}")
+  }
 }
